@@ -188,8 +188,11 @@ object Bench {
     System.err.println(f"""{"metric":"total_detail","value":$total%.3f,"unit":"sec","runs":$runsJson,"sentinel":${f3(sentinel)},"normalized":$normJson,"failed":$failedJson,"sf":"$sfDir"}""")
     // Stop the session BEFORE the contract line: spark.stop() can emit
     // shutdown warnings, and in a merged stdout+stderr capture those
-    // would land after the line and eat into the ~2KB tail window.
-    spark.stop()
+    // would land after the line and eat into the ~2KB tail window. A
+    // failing stop must not cost the record: log it and print the line.
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     // The driver-contract line: ONE compact JSON line, printed LAST on
     // stdout, small enough to survive the output-tail capture whole.
     println(f"""{"metric":"total","value":${fc(total)},"unit":"sec","queries":$qJson,"sentinel":${f3(sentinel)},"failed":$failedJson,"sf":"$sfDir"}""")

@@ -876,7 +876,9 @@ object PipelineQueries {
 
   /** Index path for the persisted-IVF gates, scoped to THIS JVM
     * invocation: a fresh per-process root (shutdown-hook-deleted) keyed
-    * by the corpus dir, so every invocation pays the index build at
+    * by the corpus dir and its embeddings file's size and mtime (a
+    * corpus regenerated in place under the same dir gets a fresh
+    * index), so every invocation pays the index build at
     * least once and nothing persists across runs — cross-run reuse of
     * an index keyed on the test data would be precompute, not
     * optimization. Within one process, repeated calls (Bench's
@@ -885,7 +887,12 @@ object PipelineQueries {
   private lazy val ivfCacheRoot: java.nio.file.Path =
     graft.util.TempDirs.create("graft-ivf-")
   private def ivfCachePath(dir: String): String = {
-    val sig = java.lang.Integer.toHexString(dir.hashCode)
+    import java.nio.file.Files
+    val corpus = graft.util.Fs.walk(java.nio.file.Paths.get(dir, "embeddings.parquet"))(
+      _.filter(Files.isRegularFile(_)).map(p =>
+        (Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSeq)
+    val sig = java.lang.Integer.toHexString(
+      (dir, corpus.map(_._1).sum, corpus.map(_._2).maxOption).hashCode)
     ivfCacheRoot.resolve(s"ivf-$sig").toString
   }
 

@@ -20,8 +20,9 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * COW: a write rewrites the touched file groups' base files.
-  * MOR: a write appends `.delta` files; `readRealtime` merges base+delta
-  * with the latest-wins window; `Compactor` folds deltas into new bases.
+  * MOR: a write appends `.delta` files; every read view merges base and
+  * delta per file group in the scan ([[graft.sql.GraftMorScan]]);
+  * `TableServices.compact` folds deltas into new bases.
   */
 final class GraftTable private (
     val spark: SparkSession,
@@ -279,14 +280,6 @@ final class GraftTable private (
       dropSoftDeleted: Boolean = false): Seq[DataFileMeta] = {
     require(!(dedupLatest && rangeBy.isDefined),
       "in-shuffle dedup requires hash layout, not range clustering")
-    // phase timing for write-path profiling (spark.graft.write.timing)
-    val timing = spark.conf.get("spark.graft.write.timing", "false").toBoolean
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      println(f"[writeFiles] $name%-18s ${(now - tPhase) / 1e9}%7.3fs")
-      tPhase = now
-    }
     val keyed = df
       .withColumn("_part", partExpr)
       .withColumn("_bucket", bucketExpr)
@@ -322,18 +315,7 @@ final class GraftTable private (
       if (dropSoftDeleted) d.filter(!coalesce(col(softDel), lit(false)))
       else d
     }
-    // profiling escape hatch only (spark.graft.write.bloom=false):
-    // quantifies the bloom write cost; reads degrade to footer-stats
-    // pruning when a file has no bloom, so flipping it is safe but
-    // point lookups pay full row-group scans — default stays on
-    val bloomOn = spark.conf.get("spark.graft.write.bloom", "true").toBoolean
-    // a leaked profiling setting would silently degrade every later
-    // commit's point-lookup pruning — make it visible in the output
-    if (!bloomOn) System.err.println(s"[graft] WARN spark.graft.write." +
-      s"bloom=false: commit $instant writes NO key blooms (profiling " +
-      "flag — point lookups degrade to footer-stats pruning)")
-    val writer0 = (if (bloomOn) (config.keyField +: config.bloomColumns).distinct
-      else Seq.empty[String])
+    val writer0 = (config.keyField +: config.bloomColumns).distinct
       // T7 key-lookup index: parquet bloom filter on the record key —
       // upsert/point-lookup scans skip row groups without the key
       // (the reference's hoodie.index.type BLOOM analog,
@@ -351,9 +333,7 @@ final class GraftTable private (
       // and blooms doubling small-file-group storage.
       .option("parquet.bloom.filter.adaptive.enabled", "true")
     val writer = maxRecordsPerFile.fold(writer0)(n => writer0.option("maxRecordsPerFile", n))
-    phase("plan")
     writer.parquet(staging.toString)
-    phase("shuffle+write")
 
     // Per-file stats (key range + ordering range + rows). Primary
     // path: parquet FOOTER harvest — O(files) metadata reads, no data
@@ -414,7 +394,6 @@ final class GraftTable private (
     val statsByFile: Map[String, (Long, Map[String, ColStat])] =
       if (stagedParquet.isEmpty) Map.empty
       else footerHarvest().getOrElse(scanHarvest())
-    phase("stats harvest")
 
     // move staged files into the stable layout
     val metas = scala.collection.mutable.ArrayBuffer[DataFileMeta]()
@@ -451,7 +430,6 @@ final class GraftTable private (
       // clean staging remains (_SUCCESS etc.)
       graft.util.Fs.walkSeq(staging).reverse.foreach(Files.deleteIfExists(_))
     }
-    phase("move+clean")
     metas.toSeq
   }
 
@@ -1298,14 +1276,12 @@ final class GraftTable private (
       df.filter(!coalesce(col(softDel), lit(false)))
     else df
 
-  /** Snapshot view: COW = live base files; MOR = realtime merge. */
+  /** Snapshot view: the latest version of every key, tombstones
+    * dropped. COW = live base files; MOR = the merged read of base and
+    * delta files ([[merged]]). */
   def read(asOf: Option[String] = None): DataFrame = {
     val snap = log.snapshot()
-    if (config.isMor) realtimeOf(snap, asOf)
-    else {
-      val s = schemaAt(snap, asOf)
-      dropDeleted(readFiles(snap.liveFiles(asOf).filterNot(_.delta), s))
-    }
+    merged(snap.liveFiles(asOf), schemaAt(snap, asOf))
   }
 
   private def schemaAt(snap: TimelineSnapshot, asOf: Option[String]): StructType =
@@ -1320,89 +1296,90 @@ final class GraftTable private (
     readFiles(snap.liveFiles(asOf).filterNot(_.delta), schemaAt(snap, asOf))
   }
 
-  /** Delta-keyed latest-wins merge: only KEYS that actually carry
-    * delta rows go through the Window — base rows of other keys pass
-    * through untouched (including legitimate `insert` duplicates,
-    * which Hudi's realtime view also leaves as-is; a key's visibility
-    * never depends on whether an unrelated key in its file group was
-    * updated). File groups without any delta file skip even the key
-    * probe. At a 1%-dirty table the Window input is O(dirty keys'
-    * rows): the delta-key set is small, the semi/anti probes broadcast
-    * under AQE, and base files of clean groups are never rescanned —
-    * the reference's "file-ids without updates are filtered out
-    * without scanning" semantics (hudi-spark-minio-trino/
-    * README.md:728-730, 966-979), sharpened to key granularity. */
-  private def mergeGroupScoped(live: Seq[DataFileMeta], sch: StructType): DataFrame = {
-    val deltaFiles = live.filter(_.delta)
-    if (deltaFiles.isEmpty) return readFiles(live, sch) // fully compacted: no Window at all
-    val deltaGroups = deltaFiles.map(f => (f.partition, f.bucket)).toSet
-    val (groupFiles, passGroups) =
-      live.partition(f => deltaGroups.contains((f.partition, f.bucket)))
-    val (baseOfGroups, idCols) =
-      withIdCols(readFiles(groupFiles.filterNot(_.delta), sch))
-    val (deltas, _) = withIdCols(readFiles(deltaFiles, sch))
-    val deltaKeys = deltas.select(idCols.map(col): _*).distinct()
-    val merged = latestWins(
-      baseOfGroups.join(deltaKeys, idCols, "left_semi").unionByName(deltas))
-    val passKeys = baseOfGroups.join(deltaKeys, idCols, "left_anti")
-      .drop(PartValCol)
-    val withPass = merged.unionByName(passKeys)
-    if (passGroups.isEmpty) withPass
-    else withPass.unionByName(readFiles(passGroups, sch))
-  }
+  /** The one MOR merge every read view goes through. A file set that
+    * holds a delta file is served by [[graft.sql.GraftMorScan]]: one
+    * input partition per file group, whose reader keeps the latest
+    * version of each delta-carrying key and passes every other base row
+    * through untouched (legitimate `insert` duplicates included, as in
+    * Hudi's realtime view) — no shuffle, no Window. A file set with no
+    * delta file (COW, or MOR after compaction) is a plain parquet read.
+    * `range = Some((lo, hi))` keeps only rows whose `_commit_time` lies
+    * in (lo, hi], decided AFTER the merge (a stale base row must lose to
+    * its newer delta version first); a null commit time is outside every
+    * range. Tombstoned rows are dropped either way. */
+  private def merged(files: Seq[DataFileMeta], sch: StructType,
+      range: Option[(String, String)] = None): DataFrame =
+    if (files.exists(_.delta)) graft.sql.GraftMorScan.frame(this, files, sch, range)
+    else {
+      val all = readFiles(files, sch)
+      dropDeleted(range.fold(all) { case (lo, hi) =>
+        all.filter(col(CommitTimeCol) > lo && col(CommitTimeCol) <= hi) })
+    }
 
-  /** Realtime view (`_rt`): merge base + delta with latest-wins, drop
-    * tombstones (README.md:730). */
-  def readRealtime(asOf: Option[String] = None): DataFrame =
-    realtimeOf(log.snapshot(), asOf)
+  /** Realtime view (`_rt`): the snapshot view — base + delta merged
+    * latest-wins, tombstones dropped (README.md:730). */
+  def readRealtime(asOf: Option[String] = None): DataFrame = read(asOf)
 
-  private def realtimeOf(snap: TimelineSnapshot, asOf: Option[String]): DataFrame =
-    dropDeleted(mergeGroupScoped(snap.liveFiles(asOf), schemaAt(snap, asOf)))
-
-  /** Incremental read: the latest state of rows written in commits in
-    * `(fromExclusive, fromExclusive + maxCommits]` (README.md:966-984).
-    * File skipping: only file groups touched by in-range row commits are
-    * scanned — and of those, only delta-bearing groups pay the merge
-    * window; table-service commits don't widen the range. */
-  def readIncremental(fromExclusive: String, maxCommits: Int = Int.MaxValue): DataFrame = {
-    val snap = log.snapshot()
-    val rowCommits = snap.commits
-      .filter(c => c.instant > fromExclusive)
+  /** The row commits (action commit|replace) of `(fromExclusive, to]`,
+    * at most `maxCommits` of them — the commits an incremental cursor,
+    * a CDC range or a stream's micro-batch consumes; table-service
+    * commits never widen a range. */
+  private[graft] def rowCommitsIn(snap: TimelineSnapshot, fromExclusive: String,
+      to: Option[String], maxCommits: Int): Seq[Commit] =
+    snap.commits
+      .filter(c => c.instant > fromExclusive && to.forall(c.instant <= _))
       .filter(c => c.action == "commit" || c.action == "replace")
       .take(maxCommits)
-    if (rowCommits.isEmpty)
-      return readFiles(Nil, schemaOf(snap)).limit(0)
-    // A restore re-adds files whose rows keep their ORIGINAL
-    // _commit_time — rows this range-read would filter out, silently
-    // hiding that data was reverted. Incremental consumption cannot
-    // cross a restore (Hudi's stance): the cursor must reset to a full
-    // snapshot resync, then resume from the restore instant.
+
+  /** What an incremental cursor over `(fromExclusive, to]` reads, shared
+    * by [[readIncremental]] and the streaming source
+    * ([[graft.sql.GraftMicroBatchStream]]): the end of the range (`to`,
+    * or the last of at most `maxCommits` row commits) and the live files,
+    * as of that end, of every file group an in-range row commit wrote
+    * into — untouched groups cannot hold an in-range row. None when the
+    * range holds no row commit.
+    *
+    * A range may not cross a restore or a bootstrap commit: restored
+    * rows keep their ORIGINAL `_commit_time` and adopted rows carry none,
+    * so the commit-time filter would silently hide them. The cursor must
+    * reset to a full snapshot (a stream: a fresh checkpoint) and resume
+    * from that commit (Hudi's stance). */
+  private[graft] def incrementalFiles(snap: TimelineSnapshot, fromExclusive: String,
+      to: Option[String], maxCommits: Int = Int.MaxValue): Option[(String, Seq[DataFileMeta])] = {
+    val rowCommits = rowCommitsIn(snap, fromExclusive, to, maxCommits)
+    if (rowCommits.isEmpty) return None
+    val range = s"incremental range ($fromExclusive, ${to.getOrElse("…")}]"
     rowCommits.find(_.operation == "restore").foreach { r =>
       throw new IllegalStateException(
-        s"incremental range ($fromExclusive, …] crosses restore commit " +
-        s"${r.instant}: restored rows carry their original commit time and " +
-        "are invisible to an incremental cursor. Reset the cursor — take a " +
-        s"full snapshot, then resume incrementally from ${r.instant}")
+        s"$range crosses restore commit ${r.instant}: restored rows carry " +
+        "their original commit time and are invisible to an incremental " +
+        "cursor. Reset the cursor — take a full snapshot (a stream: restart " +
+        s"from a fresh checkpoint), then resume incrementally from ${r.instant}")
     }
-    // Same silent-miss class: bootstrap-adopted rows carry null
-    // _commit_time, so the range filter below would drop every one of
-    // them. A cursor that predates the bootstrap cannot see the adopted
-    // data — enforce the resync instead of documenting it.
     rowCommits.find(_.operation == "bootstrap").foreach { b =>
       throw new IllegalStateException(
-        s"incremental range ($fromExclusive, …] crosses bootstrap commit " +
-        s"${b.instant}: adopted rows carry no commit time and are invisible " +
-        "to an incremental cursor. Resync from a snapshot, then resume " +
-        s"incrementally from ${b.instant}")
+        s"$range crosses bootstrap commit ${b.instant}: adopted rows carry " +
+        "no commit time and are invisible to an incremental cursor. Resync " +
+        "from a snapshot (a stream: restart from a fresh checkpoint), then " +
+        s"resume incrementally from ${b.instant}")
     }
-    val end = rowCommits.last.instant
+    val end = to.getOrElse(rowCommits.last.instant)
     val touched = rowCommits.flatMap(_.added).map(f => (f.partition, f.bucket)).toSet
-    val live = snap.liveFiles(Some(end))
-      .filter(f => touched.contains((f.partition, f.bucket)))
-    val s = schemaAt(snap, Some(end))
-    dropDeleted(mergeGroupScoped(live, s)
-      .filter(col(TableConfig.CommitTimeCol) > fromExclusive &&
-              col(TableConfig.CommitTimeCol) <= end))
+    Some(end -> snap.liveFiles(Some(end))
+      .filter(f => touched.contains((f.partition, f.bucket))))
+  }
+
+  /** Incremental read: the latest state of rows written in commits in
+    * `(fromExclusive, fromExclusive + maxCommits]` (README.md:966-984),
+    * scanning only the file groups those commits touched
+    * ([[incrementalFiles]]). */
+  def readIncremental(fromExclusive: String, maxCommits: Int = Int.MaxValue): DataFrame = {
+    val snap = log.snapshot()
+    incrementalFiles(snap, fromExclusive, None, maxCommits) match {
+      case None => readFiles(Nil, schemaOf(snap)).limit(0)
+      case Some((end, live)) =>
+        merged(live, schemaAt(snap, Some(end)), Some((fromExclusive, end)))
+    }
   }
 
   /** CDC-format incremental read (the Hudi incremental query with
@@ -1430,10 +1407,7 @@ final class GraftTable private (
   def readCdc(fromExclusive: String, maxCommits: Int = Int.MaxValue,
       withPreimages: Boolean = false): DataFrame = {
     val snap = log.snapshot()
-    val rowCommits = snap.commits
-      .filter(c => c.instant > fromExclusive)
-      .filter(c => c.action == "commit" || c.action == "replace")
-      .take(maxCommits)
+    val rowCommits = rowCommitsIn(snap, fromExclusive, None, maxCommits)
     val endSchema = schemaAt(snap,
       rowCommits.lastOption.map(_.instant).orElse(Some(fromExclusive)))
     val empty = readFiles(Nil, endSchema).limit(0)
@@ -1475,9 +1449,8 @@ final class GraftTable private (
     // _hoodie_partition_path analog) via the rename at the end
     def stateOf(files: Seq[DataFileMeta], asOf: String): DataFrame =
       withIdCols(align(
-        dropDeleted(mergeGroupScoped(
-          files.filter(f => touched.contains((f.partition, f.bucket))),
-          schemaAt(snap, Some(asOf)))),
+        merged(files.filter(f => touched.contains((f.partition, f.bucket))),
+          schemaAt(snap, Some(asOf))),
         endSchema))._1
     val idCols =
       if (config.partitionFormat.isDefined) Seq(PartValCol, config.keyField)
@@ -1539,16 +1512,9 @@ final class GraftTable private (
       val survivingGroups = live
         .filter(f => StatsPruner.mayContain(dt, f.stats.get(column), lo, hi))
         .map(f => (f.partition, f.bucket)).toSet
-      val files = live.filter(f => survivingGroups.contains((f.partition, f.bucket)))
-      dropDeleted(mergeGroupScoped(files, s))
-    } else {
-      val files = live.filter(f =>
-        StatsPruner.mayContain(dt, f.stats.get(column), lo, hi))
-      // dropDeleted, not a bare filter: a never-written table has an
-      // EMPTY schema and the unguarded soft-delete filter threw
-      // UNRESOLVED_COLUMN on the very first probe
-      dropDeleted(readFiles(files, s))
-    }
+      merged(live.filter(f => survivingGroups.contains((f.partition, f.bucket))), s)
+    } else
+      merged(live.filter(f => StatsPruner.mayContain(dt, f.stats.get(column), lo, hi)), s)
   }
 
   /** Point-set twin of [[readWhereBetween]]: only files whose [min,max]
@@ -1580,11 +1546,8 @@ final class GraftTable private (
     if (config.isMor) {
       val survivingGroups = live.filter(mayMatch)
         .map(f => (f.partition, f.bucket)).toSet
-      val files = live.filter(f => survivingGroups.contains((f.partition, f.bucket)))
-      dropDeleted(mergeGroupScoped(files, s))
-    } else {
-      dropDeleted(readFiles(live.filter(mayMatch), s))
-    }
+      merged(live.filter(f => survivingGroups.contains((f.partition, f.bucket))), s)
+    } else merged(live.filter(mayMatch), s)
   }
 
   /** Partition listing (SHOW PARTITIONS analog, README.md:372-374). */

@@ -110,17 +110,6 @@ class IncrementalDedup(spark: SparkSession, root: String,
     * store skips its insert if it already holds the batch). */
   def dedupBatch(batch: DataFrame, idCol: String, textCol: String,
       batchNo: Long): DataFrame = {
-    // step timing for tools.ProfileIncDedup (off unless conf'd on)
-    val debugTiming = spark.conf
-      .getOption("spark.graft.incdedup.debugTiming").contains("true")
-    def step[A](name: String)(f: => A): A =
-      if (!debugTiming) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[incdedup]   $name%-28s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-        r
-      }
     val bandsDone = lastPublished(bandIndex).exists(_ >= batchNo)
     val hashesDone = lastPublished(hashStore).exists(_ >= batchNo)
     require(lastPublished(hashStore).forall(_ <= batchNo) &&
@@ -155,9 +144,9 @@ class IncrementalDedup(spark: SparkSession, root: String,
         // limit(cap+1) collect both sizes the set and fetches it (a
         // cap+1-sized result means "too big", discard)
         val batchBands: Option[Map[String, Seq[String]]] = {
-          val collected = step("collect batch bands")(sigs
+          val collected = sigs
             .select("band", "bsig").distinct()
-            .limit(maxPruneSigs + 1).collect())
+            .limit(maxPruneSigs + 1).collect()
           if (collected.length > maxPruneSigs) None
           else Some(collected
             .groupBy(_.get(0).toString)
@@ -187,9 +176,9 @@ class IncrementalDedup(spark: SparkSession, root: String,
             .filter(size(col("ids")) > 1),
           "ids", "struct(__x AS doc_a, y AS doc_b)")
           .select(col("p.doc_a"), col("p.doc_b"))
-        val candidates = step("candidates (index scan + join)")(
-          ((if (hasHistory) cross.union(internal) else internal).distinct())
-            .localCheckpoint()) // materialized: read twice (ids + verify)
+        val candidates = (if (hasHistory) cross.union(internal) else internal)
+          .distinct()
+          .localCheckpoint() // materialized: read twice (ids + verify)
         // Exact verification touches ONLY candidate docs. Both sides of
         // every pair are candidate ids by construction, so the hash
         // store is read through the id point-set prune — O(collisions)
@@ -216,22 +205,20 @@ class IncrementalDedup(spark: SparkSession, root: String,
             if (hashesDone) stored.select("id", "hashes")
             else newHashes.unionByName(stored.select("id", "hashes"))
           }
-        val verified = step("verify (hash fetch + jaccard)")(Dedup
+        val verified = Dedup
           .jaccardOfCandidates(allHashes, candidates, threshold)
-          .localCheckpoint())
+          .localCheckpoint()
         // fold the batch in AFTER querying (a batch never pairs with
         // itself through the index — internal pairs covered above).
         // Bands FIRST, hashes LAST: the hash store is the commit point,
         // and each insert is skipped if that store already holds the
         // batch (crash between the two commits → re-run repairs).
         if (!bandsDone) {
-          step("publish band index")(
-            bandIndex.bulkInsert(sigs.withColumn("_b", lit(batchNo))))
+          bandIndex.bulkInsert(sigs.withColumn("_b", lit(batchNo)))
           ()
         }
         if (!hashesDone) {
-          step("publish hash store")(
-            hashStore.bulkInsert(withHashes.withColumn("_b", lit(batchNo))))
+          hashStore.bulkInsert(withHashes.withColumn("_b", lit(batchNo)))
           ()
         }
         verified

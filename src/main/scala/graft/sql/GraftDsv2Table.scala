@@ -68,14 +68,24 @@ final class GraftDsv2Table(val graft: GraftTable, delegate: Table,
       scanFiles, scanSchema, graft.config.scanPartitionField, options)
 }
 
-/** Realtime DSv2 table for a MOR snapshot with live delta files: reads
-  * go through [[GraftMorScanBuilder]] (per-file-group base+delta merge
-  * in the reader — the bare-name merged snapshot of the reference
-  * contract, README.md:341-366); DML shares the transactional paths of
-  * the COW table. */
+/** Realtime DSv2 table over a chosen MOR file set: reads go through
+  * [[GraftMorScanBuilder]] (per-file-group base+delta merge in the
+  * reader — the bare-name merged snapshot of the reference contract,
+  * README.md:341-366), optionally restricted to the commit range
+  * `range` = (lo, hi]. The catalog serves it for a MOR snapshot with
+  * live delta files, and [[GraftMorScan.frame]] wraps it for the
+  * `GraftTable` read views. DML shares the transactional paths of the
+  * COW table. */
 final class GraftMorDsv2Table(val graft: GraftTable, ident: String,
-    live: Seq[DataFileMeta], scanSchema: StructType)
+    live: Seq[DataFileMeta], committedSchema: StructType,
+    range: Option[(String, String)] = None)
     extends Table with SupportsRead with GraftDmlSupport {
+
+  // every column nullable, as a parquet read's: files written before a
+  // column was added read it as null, and a non-nullable read schema
+  // makes the parquet reader fail on them ("Required column is missing")
+  private val scanSchema =
+    StructType(committedSchema.fields.map(_.copy(nullable = true)))
 
   override def name(): String = ident
   override def schema(): StructType = scanSchema
@@ -107,7 +117,7 @@ final class GraftMorDsv2Table(val graft: GraftTable, ident: String,
       scanSchema, graft.config.keyField, graft.config.orderingField,
       graft.config.softDeleteField, options,
       partitionField = graft.config.scanPartitionField,
-      numBuckets = graft.config.numBuckets)
+      numBuckets = graft.config.numBuckets, range = range)
 }
 
 /** Write/delete half of the DSv2 tables: INSERT / INSERT OVERWRITE

@@ -1,24 +1,28 @@
 package graft.sql
 
-import graft.core.{DataFileMeta, TableConfig}
+import graft.core.{DataFileMeta, GraftTable, TableConfig}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType, LongType, ShortType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
-/** DSv2 realtime scan for MOR tables: the merged snapshot served from
-  * a bare catalog name (the reference contract — a MOR table queried
-  * by name returns base+delta merged, hudi-spark-minio-trino/
-  * README.md:341-366) WITHOUT a shuffle.
+/** The MOR merge: the one scan that serves every merged read of a
+  * merge-on-read table — the catalog's bare name (the reference
+  * contract: a MOR table queried by name returns base+delta merged,
+  * hudi-spark-minio-trino/README.md:341-366), every `GraftTable` read
+  * view whose file set holds a delta file ([[GraftMorScan.frame]]) and
+  * the streaming source ([[GraftMicroBatchStream]]) — WITHOUT a shuffle.
   *
   * Key insight: graft writes route every record key to exactly one
   * file group (partition, bucket), so the latest-wins merge never
@@ -26,20 +30,19 @@ import scala.jdk.CollectionConverters._
   * group; its [[PartitionReader]] merges the group's base and delta
   * rows locally — delta rows (bounded: deltas compact away) are
   * buffered in a key→winner map, base rows stream through it. At
-  * 100 TB this plan is one parquet pass with zero exchanges, vs the
-  * DataFrame realtime view's window shuffle. The on-heap map is
-  * guarded: plan time caps per-group delta bytes
+  * 100 TB this plan is one parquet pass with zero exchanges. The
+  * on-heap map is guarded: plan time caps per-group delta bytes
   * (`spark.graft.mor.maxDeltaBytesPerGroup`, default 2 GiB) and the
   * reader caps buffered distinct keys
   * (`spark.graft.mor.maxDeltaRowsPerGroup`, default 20M), each failing
   * with a "compact first" error instead of an executor OOM.
   *
-  * Merge semantics replicate `GraftTable.latestWins` +
-  * `mergeGroupScoped` exactly: winner per key by (ordering DESC NULLS
-  * LAST, _commit_time DESC NULLS LAST); only delta-carrying keys are
-  * merged (base rows of other keys pass through untouched, preserving
-  * legitimate insert duplicates); soft-deleted winners and
-  * pass-through rows are dropped.
+  * Merge semantics: winner per key by (ordering DESC NULLS LAST,
+  * _commit_time DESC NULLS LAST) — the order of `GraftTable.latestWins`
+  * on the write path; only delta-carrying keys are merged (base rows of
+  * other keys pass through untouched, preserving legitimate insert
+  * duplicates); soft-deleted winners and pass-through rows are dropped.
+  * An optional commit range (lo, hi] is applied after the merge.
   *
   * Column pruning is supported (the scan reads requested ∪ merge
   * columns); filters are NOT evaluated below the merge — a stale base
@@ -63,7 +66,8 @@ final class GraftMorScanBuilder(
     softDeleteField: String,
     options: CaseInsensitiveStringMap,
     partitionField: Option[String] = None,
-    numBuckets: Int = 0)
+    numBuckets: Int = 0,
+    range: Option[(String, String)] = None)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
 
@@ -136,7 +140,7 @@ final class GraftMorScanBuilder(
       surviving.groupBy(f => (f.partition, f.bucket)).size)
     new GraftMorScan(spark, tableName, root,
       surviving, tableSchema, keyField, orderingField, softDeleteField,
-      required, partitionField, numBuckets)
+      required, partitionField, numBuckets, range)
   }
 }
 
@@ -151,7 +155,8 @@ final class GraftMorScan(
     softDeleteField: String,
     required: StructType,
     partitionField: Option[String] = None,
-    numBuckets: Int = 0)
+    numBuckets: Int = 0,
+    range: Option[(String, String)] = None)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsReportPartitioning with SupportsRuntimeV2Filtering {
 
@@ -326,6 +331,7 @@ final class GraftMorScan(
         fs.filterNot(_.delta).map(f => FileSlice(s"$root/${f.path}", f.bytes)).toArray,
         fs.filter(_.delta).map(f => FileSlice(s"$root/${f.path}", f.bytes)).toArray,
         s"(partition=$p, bucket=$b)",
+        ctLo = range.map(_._1), ctHi = range.map(_._2),
         partKey = key)
     }.toArray[InputPartition]
 
@@ -359,6 +365,16 @@ final class GraftMorScan(
 }
 
 object GraftMorScan {
+  /** A DataFrame over the merged read of `files` (a chosen file set of
+    * table `t`, read through `schema`), optionally restricted to rows
+    * committed in `range` = (lo, hi]. The relation is the same DSv2
+    * table the catalog serves, so API reads and SQL share one plan
+    * shape: one scan, no exchange. */
+  def frame(t: GraftTable, files: Seq[DataFileMeta], schema: StructType,
+      range: Option[(String, String)]): DataFrame =
+    DatasetBridge.ofRows(t.spark, DataSourceV2Relation.create(
+      new GraftMorDsv2Table(t, t.config.name, files, schema, range), None, None))
+
   /** Test observability: groups planned after the last runtime filter,
     * by table name. */
   val lastRuntimePlanned = new java.util.concurrent.ConcurrentHashMap[String, Int]()

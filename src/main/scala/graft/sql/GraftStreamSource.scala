@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.{GraftTable, TableConfig}
+import graft.core.{DataFileMeta, GraftTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -8,8 +8,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.connector.write.streaming.StreamingWrite
-import org.apache.spark.sql.execution.datasources.FileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
@@ -24,16 +22,13 @@ import java.util
   *
   * Offsets ARE commit instants (sortable strings, checkpointed by
   * Spark) — recovery replays exactly the uncommitted commit range, and
-  * exactly-once follows from commit-instant determinism. Each batch
-  * plans one [[InputPartition]] per TOUCHED file group (live files as
-  * of the range end), and the reader is the [[GraftMorPartitionReader]]
-  * merge with the commit-range filter applied after the merge — the
-  * same "stale base row loses to its delta before visibility is
-  * decided" shape as the batch incremental read, with zero exchanges.
-  *
-  * Restore/bootstrap commits inside a planned range throw (a streaming
-  * cursor cannot see restored/adopted rows — same contract as
-  * readIncremental's guards).
+  * exactly-once follows from commit-instant determinism. A batch reads
+  * what `GraftTable.readIncremental` reads: the range's file set comes
+  * from `GraftTable.incrementalFiles` (the TOUCHED file groups' live
+  * files as of the range end; restore/bootstrap commits inside the range
+  * throw), and [[GraftMorScan]] plans and reads it — one partition per
+  * group, base+delta merged in the reader with the commit-range filter
+  * applied after the merge, zero exchanges, the same delta-volume caps.
   */
 class GraftStreamTableProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -117,16 +112,6 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
   // writers append to it while the stream runs
   private def table: GraftTable = GraftTable.load(spark, root)
 
-  // Same delta-volume guards (and the same confs) as the batch
-  // GraftMorScan: a neglected table the batch scan rejects with
-  // "compact first" must not stream into an executor-heap OOM either.
-  private def confLong(key: String, dflt: Long): Long =
-    spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-  private def maxDeltaBytes: Long =
-    confLong("spark.graft.mor.maxDeltaBytesPerGroup", 2L << 30)
-  private def maxDeltaRows: Long =
-    confLong("spark.graft.mor.maxDeltaRowsPerGroup", 20L * 1000 * 1000)
-
   override def initialOffset(): Offset = GraftOffset("0")
   override def deserializeOffset(json: String): Offset = GraftOffset(json)
   override def latestOffset(): Offset =
@@ -156,10 +141,8 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
     val cap = availableNowCap.fold(head)(c => if (c < head) c else head)
     maxCommitsPerTrigger match {
       case Some(n) if n > 0 =>
-        val window = table.log.commits()
-          .filter(c => c.instant > from && c.instant <= cap)
-          .filter(c => c.action == "commit" || c.action == "replace")
-          .take(n)
+        val t = table
+        val window = t.rowCommitsIn(t.log.snapshot(), from, Some(cap), n)
         GraftOffset(window.lastOption.map(_.instant).getOrElse(from))
       case _ => GraftOffset(cap)
     }
@@ -171,67 +154,24 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GraftOffset].instant
     val to = end.asInstanceOf[GraftOffset].instant
-    if (to <= from) return Array.empty
     val t = table
-    val snap = t.log.snapshot()
-    val rowCommits = snap.commits
-      .filter(c => c.instant > from && c.instant <= to)
-      .filter(c => c.action == "commit" || c.action == "replace")
-    // same cursor-safety contract as readIncremental: a stream cannot
-    // silently skip restored/adopted rows
-    rowCommits.find(c => c.operation == "restore" || c.operation == "bootstrap")
-      .foreach { c =>
-        throw new IllegalStateException(
-          s"graft stream range ($from, $to] crosses ${c.operation} commit " +
-          s"${c.instant}: its rows are invisible to an incremental cursor. " +
-          "Restart the stream from a fresh checkpoint (snapshot resync), " +
-          s"then resume from ${c.instant}")
-      }
-    val touched = rowCommits.flatMap(_.added)
-      .map(f => (f.partition, f.bucket)).toSet
-    snap.liveFiles(Some(to))
-      .filter(f => touched.contains((f.partition, f.bucket)))
-      .groupBy(f => (f.partition, f.bucket))
-      .map { case ((p, b), fs) =>
-        val deltaBytes = fs.filter(_.delta).map(_.bytes).sum
-        if (deltaBytes > maxDeltaBytes)
-          throw new IllegalStateException(
-            s"graft stream read of $root group (partition=$p, bucket=$b) " +
-            s"would buffer $deltaBytes delta bytes, over " +
-            s"spark.graft.mor.maxDeltaBytesPerGroup=$maxDeltaBytes: compact " +
-            "the table first (TableServices.compact / CALL run_compaction), " +
-            "or raise the cap")
-        GraftMorInputPartition(
-          fs.filterNot(_.delta).map(f => FileSlice(s"$root/${f.path}", f.bytes)).toArray,
-          fs.filter(_.delta).map(f => FileSlice(s"$root/${f.path}", f.bytes)).toArray,
-          s"(partition=$p, bucket=$b)",
-          ctLo = Some(from), ctHi = Some(to))
-      }.toArray[InputPartition]
+    t.incrementalFiles(t.log.snapshot(), from, Some(to)) match {
+      case None => Array.empty
+      case Some((_, files)) => scanOf(t, files, Some((from, to))).planInputPartitions()
+    }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val cfg = table.config
-    // unlike the batch scan there is no column pruning on this path
-    // (the stream emits the full table schema), so the merge superset
-    // IS the table schema and the output mapping is the identity —
-    // the batch path's need/filter dance would be a no-op here
-    val superset = tableSchema
-    val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark,
-      dataSchema = tableSchema,
-      partitionSchema = new StructType(),
-      requiredSchema = superset,
-      filters = Nil,
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    GraftMorReaderFactory(readFunc, superset,
-      tableSchema.fieldNames.map(superset.fieldIndex),
-      superset.fieldIndex(cfg.keyField),
-      superset.fieldIndex(cfg.orderingField),
-      superset.fieldIndex(TableConfig.CommitTimeCol),
-      superset.fieldIndex(cfg.softDeleteField),
-      s"graft_stream($root)", maxDeltaRows = maxDeltaRows)
-    // the commit-range visibility filter rides in each InputPartition
-    // (set by planInputPartitions) — the factory stays batch-agnostic
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    scanOf(table, Nil, None).createReaderFactory()
+
+  /** The batch scan over `files`, emitting the full table schema: its
+    * planning (one partition per file group, the delta-bytes cap, the
+    * commit range carried by each partition) and its reader factory are
+    * the stream's. No bucket count is passed, so no partitioning is
+    * reported. */
+  private def scanOf(t: GraftTable, files: Seq[DataFileMeta],
+      range: Option[(String, String)]): GraftMorScan =
+    new GraftMorScan(spark, t.config.name, root, files, tableSchema,
+      t.config.keyField, t.config.orderingField, t.config.softDeleteField,
+      required = tableSchema, range = range)
 }

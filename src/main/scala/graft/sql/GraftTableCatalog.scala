@@ -20,13 +20,13 @@ import scala.jdk.CollectionConverters._
   * `VERSION AS OF '<instant>'` / `TIMESTAMP AS OF` — the reference's
   * Hudi-catalog role (README.md:354-358).
   *
-  * Read path: the catalog resolves a snapshot's live base files from
-  * the commit log and hands Spark its own parquet DSv2 table
-  * ([[ParquetTable]]) over exactly those files — full pushdown,
-  * pruning and vectorization for free, file selection ours. COW
-  * snapshot and MOR read-optimized semantics; the MOR realtime merge
-  * needs the latest-wins window and stays on
-  * `GraftTable.readRealtime`/registered views.
+  * Read path: the catalog resolves a snapshot's live files from the
+  * commit log. Base files alone (COW, MOR read-optimized, compacted
+  * MOR) are served by Spark's own parquet DSv2 table ([[ParquetTable]])
+  * over exactly those files — full pushdown, pruning and vectorization
+  * for free, file selection ours. A MOR file set with delta files is
+  * served by [[GraftMorScan]], the merge `GraftTable`'s read views go
+  * through as well.
   *
   * Wire-up:
   * {{{
@@ -65,9 +65,11 @@ class GraftTableCatalog extends TableCatalog with FunctionCatalog {
   /** Bare table name = snapshot semantics (the reference contract,
     * README.md:341-344): a MOR table with live delta files serves the
     * MERGED snapshot through [[GraftMorScanBuilder]] (per-file-group
-    * base+delta merge in the partition reader — no shuffle); once
-    * compaction has folded all deltas, base files ARE the snapshot and
-    * the plain parquet scan (full pushdown + file skipping) serves.
+    * base+delta merge in the partition reader — no shuffle; the same
+    * scan `GraftTable.read` builds its frame on, so SQL and the API
+    * return the same rows); once compaction has folded all deltas, base
+    * files ARE the snapshot and the plain parquet scan (full pushdown +
+    * file skipping) serves, as in `GraftTable.read`.
     * Hive-sync-style suffixes work like the registered views:
     * `<name>_ro` always serves base files (stale-by-contract),
     * `<name>_rt` always serves the merged view. */

@@ -2,7 +2,7 @@ package graft.core
 
 import graft.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -63,18 +63,19 @@ class Round2CoreSpec extends AnyFunSuite {
     // content: latest state everywhere
     val got = rt.select("key", "volume").as[(String, Long)].collect().toMap
     assert(got.size == 16 && got("K1") == 100L && got("K2") == 2L)
-    // plan: a Union of (windowed merge over the dirty KEYS) and
-    // pass-through scans — no single scan reads the whole table, and
-    // the Window appears exactly once
-    val plan = rt.queryExecution.optimizedPlan
-    assert(plan.toString.contains("Union"))
-    val scanned = plan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.length
-    }
-    val total = t.log.liveFiles().size
-    assert(scanned.nonEmpty && scanned.forall(_ < total))
-    assert(plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size == 1)
+    // plan: the per-file-group merge scan — one GraftMorScan over the
+    // whole file set holding the one delta file, merged in the reader:
+    // no Window and no Exchange anywhere
+    assert(rt.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
+    val physical = MorMergeSpec.physical(rt)
+    assert(physical.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+      physical.treeString)
+    val scans = physical.collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[graft.sql.GraftMorScan] => b.scan }
+    assert(scans.size == 1, physical.treeString)
+    assert(scans.head.description().contains("deltaFiles=1"), scans.head.description())
   }
 
   test("MOR realtime: insert-duplicate visibility does not depend on unrelated deltas") {
