@@ -303,10 +303,22 @@ final class GraftTable private (
     // the COW merge path the rewritten base rows never travel through a
     // key-hash exchange at all.
     val shuffled = if (!dedupLatest) shuffled0 else {
+      // In a tombstone-dropping write, a tombstone of the writing commit
+      // with a null ordering (a key-only CDC delete image) beats every
+      // stored version of its key: nothing can rank it, and it names a
+      // row the source just deleted. It keys on the writing instant so
+      // only the incoming batch qualifies: stored rows carry older
+      // instants, so compaction never ranks by it, and MOR delta writes
+      // (which keep tombstones) do not apply it.
+      val nullOrderedTombstone =
+        if (!dropSoftDeleted) None
+        else Some((coalesce(col(softDel), lit(false)) &&
+          col(config.orderingField).isNull &&
+          col(CommitTimeCol) === lit(instant)).desc)
       val w = Window.partitionBy(col("_part"), col("_bucket"))
-        .orderBy(col(config.keyField).asc,
-          col(config.orderingField).desc_nulls_last,
-          col(CommitTimeCol).desc_nulls_last)
+        .orderBy(Seq(col(config.keyField).asc) ++ nullOrderedTombstone ++
+          Seq(col(config.orderingField).desc_nulls_last,
+            col(CommitTimeCol).desc_nulls_last): _*)
       val d = shuffled0
         .withColumn("__prevk", lag(col(config.keyField), 1).over(w))
         .filter(col("__prevk").isNull ||
@@ -670,8 +682,14 @@ final class GraftTable private (
       val touched = touchedKeyRanges(batch)
       val keyType = evolved.fields.find(_.name == config.keyField)
         .map(_.dataType).getOrElse(StringType)
-      val (rewrite, dropped) = snap.liveFiles().partition(
-        overlapsIncoming(_, touched, keyType))
+      // the delete identity is key-only: a stored key survives when the
+      // source holds it under ANY partition value, so a group is dropped
+      // unread only if no batch key range of its bucket, in any
+      // partition, overlaps it (a key hashes to the same bucket everywhere)
+      val live = snap.liveFiles()
+      val rewrite = live.filter(f => touched.exists {
+        case ((_, b), (mn, mx)) => (f.bucket < 0 || b == f.bucket) &&
+          StatsPruner.rangesOverlap(keyType, f.minKey, f.maxKey, mn, mx) })
       val existing = readFiles(rewrite, evolved)
       // stored keys absent from the source are deleted: semi-join on
       // the batch's key set — the same key-only identity the
@@ -683,9 +701,9 @@ final class GraftTable private (
       val added = writeFiles(kept.unionByName(batch), instant,
         delta = false, dedupLatest = true, dropSoftDeleted = true)
       commitValidated(Commit(instant, "commit", "full_sync",
-        added = added, removed = (rewrite ++ dropped).map(_.path),
+        added = added, removed = live.map(_.path),
         schemaJson = evolved.json), planning,
-        touched.keySet ++ dropped.map(f => (f.partition, f.bucket)))
+        touched.keySet ++ live.map(f => (f.partition, f.bucket)))
     } finally batch.unpersist()
   }
 

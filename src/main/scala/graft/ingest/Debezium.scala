@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   * `{"before": {...}|null, "after": {...}|null, "op": "c|u|d|r",
   *   "ts_ms": ...}` keyed by the table's PK. Application semantics:
   * c/u/r upsert `after`; d deletes `before`'s key. One batch applies
-  * as (at most) one upsert commit + one delete commit, ordered so the
-  * per-key latest event in the batch wins — the connector's
-  * at-least-once delivery composes with keyed latest-wins idempotence.
+  * as (at most) one upsert commit in which deletes ride as tombstones
+  * and the per-key latest event wins — the connector's at-least-once
+  * delivery composes with keyed latest-wins idempotence.
   */
 object Debezium {
 
@@ -242,10 +242,9 @@ object Debezium {
     * `updatedFields` overwrite, everything else is preserved. */
   def applyMongo(table: GraftTable, changes: DataFrame): Seq[String] = {
     // persist: the per-row Jackson normalization upstream would
-    // otherwise re-run for every downstream action (emptiness probes,
-    // the upsert write, the delete key-range agg + probe join, the
-    // partial fold) — the same reason streamIntoRouted persists its
-    // micro-batch
+    // otherwise re-run for every downstream action (apply's emptiness
+    // probe and upsert, the partial probe and fold) — the same reason
+    // streamIntoRouted persists its micro-batch
     val cached = changes.persist()
     try {
       val full = cached.filter(!col("partial")).drop("partial")
@@ -494,16 +493,23 @@ object Debezium {
     parse(jsons, "json", row)
   }
 
-  /** Apply parsed change events to a graft table.
+  /** Apply parsed change events to a graft table as ONE upsert commit;
+    * an empty batch makes none.
     *
-    * Semantics: for each key, the batch's latest event (by ts_ms)
-    * decides the action — c/u/r upsert the `after` image, d deletes.
-    * A delete is applied only if the table's current row isn't newer
-    * than the delete's image (stale tombstones from at-least-once
-    * replay are dropped), matching the ordering-respecting merge the
-    * rest of the engine uses. If the row schema lacks the table's
-    * ordering column, ts_ms is stamped into it so cross-batch binlog
-    * order keeps winning. */
+    * For each key, the batch's latest event (by ts_ms) decides: c/u/r
+    * upsert the `after` image, d writes a tombstone — the `before`
+    * image with the table's soft-delete flag set. Tombstones ride the
+    * upsert's latest-wins merge like any other version, so one batch is
+    * atomic and the merge decides every delete: a delete older than the
+    * stored row (an at-least-once replay) loses the ordering compare
+    * and is dropped; at equal ordering the tombstone's newer commit time
+    * wins. A key-only before image carries no ordering (Postgres
+    * default REPLICA IDENTITY, Mongo deletes) and cannot be proven
+    * stale: a COW write ranks the writing commit's null-ordering
+    * tombstone above every stored version of its key. (A MOR read ranks
+    * a null ordering lowest, so there such a delete does not apply.) If
+    * the row schema lacks the table's ordering column, ts_ms is stamped
+    * into it so cross-batch binlog order keeps winning. */
   def apply(table: GraftTable, changes: DataFrame): Seq[String] = {
     import org.apache.spark.sql.expressions.Window
     val cfg = table.config
@@ -513,10 +519,13 @@ object Debezium {
 
     // envelope columns under reserved names BEFORE the r.* expansion —
     // a row schema carrying its own `ts_ms`/`op` column would otherwise
-    // make the window/select references ambiguous
+    // make the window/select references ambiguous. A record without an
+    // op (the null-value Kafka record that follows a delete under the
+    // connector default tombstones.on.delete=true) is no event.
     val imaged = changes.select(
         coalesce(col("after"), col("before")).as("r"),
         col("op").as("__ev_op"), col("ts_ms").as("__ev_ts"))
+      .filter(col("__ev_op").isNotNull)
       .select(col("r.*") +: Seq(col("__ev_op"), col("__ev_ts")): _*)
     val withOrd =
       if (rowCols.contains(cfg.orderingField)) imaged
@@ -531,47 +540,12 @@ object Debezium {
     val w = Window.partitionBy(keyCols: _*)
       .orderBy(col("__ev_ts").desc,
         when(col("__ev_op") === "d", 1).otherwise(0).desc)
-    // persisted: the parse + window plan feeds ~5 downstream actions
-    // (emptiness probes, the upsert write, the delete range agg +
-    // probe join) — without this every action re-decodes the batch
+    val dataCols = withOrd.columns
+      .filterNot(Set("__ev_op", "__ev_ts", cfg.softDeleteField))
     val latest = withOrd
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .persist()
-    try {
-      val dataCols = withOrd.columns.filterNot(Set("__ev_op", "__ev_ts", "__rn"))
-      val upserts = latest.filter(col("__ev_op") =!= "d")
-        .select(dataCols.distinct.map(col).toIndexedSeq: _*)
-      val deletes = latest.filter(col("__ev_op") === "d")
-        .select(dataCols.distinct.map(col).toIndexedSeq: _*)
-
-      var commits = List.empty[String]
-      if (!upserts.isEmpty) commits ::= table.upsert(upserts)
-      // schema-empty = never written: nothing can exist to delete, and
-      // the probe read would have no columns to select
-      if (!deletes.isEmpty && table.schema.nonEmpty) {
-        // drop deletes that are older than the current table row. The
-        // probe read is PRUNED to the deletes' key range via the same
-        // commit-log stats the upsert planner uses — a CDC batch pays
-        // O(touched file groups), not a full-table scan.
-        val idCols = cfg.partitionField.toSeq :+ cfg.keyField
-        val range = deletes.agg(
-          min(col(cfg.keyField)).cast(StringType).as("mn"),
-          max(col(cfg.keyField)).cast(StringType).as("mx")).first()
-        val cur = table.readWhereBetween(cfg.keyField,
-            Option(range.getString(0)), Option(range.getString(1)))
-          .select((idCols.map(col) :+ col(cfg.orderingField).as("__cur_ord")): _*)
-        // a delete whose image carries NO ordering value (key-only
-        // before images: Postgres default REPLICA IDENTITY, Mongo
-        // deletes) cannot be proven stale — it APPLIES (the connector
-        // only emits a delete for a row that was just deleted); the
-        // null comparison previously dropped such tombstones silently
-        val valid = deletes.join(cur, idCols)
-          .filter(col(cfg.orderingField).isNull ||
-            col("__cur_ord") <= col(cfg.orderingField))
-          .drop("__cur_ord")
-        if (!valid.isEmpty) commits ::= table.deleteRows(valid)
-      }
-      commits.reverse
-    } finally { latest.unpersist(); () }
+      .select((dataCols.map(col) :+
+        (col("__ev_op") === "d").as(cfg.softDeleteField)).toIndexedSeq: _*)
+    if (imaged.isEmpty) Nil else Seq(table.upsert(latest))
   }
 }

@@ -915,10 +915,9 @@ final class GraftSql(catalog: GraftCatalog) {
     // would re-list between clauses and resurrect just-deleted keys as
     // "not matched"). Lazy also keeps the classic-upsert form from
     // paying the probe's source-range aggregate. The probe itself is
-    // PRUNED to the source's key range through commit-log stats (the
-    // same pattern as the Debezium CDC apply): a narrow-key MERGE
-    // reads only file groups that may hold source keys, not the whole
-    // table's key column.
+    // PRUNED to the source's key range through commit-log stats
+    // (readWhereBetween): a narrow-key MERGE reads only file groups
+    // that may hold source keys, not the whole table's key column.
     lazy val existingKeys = GraftSql.mergeKeyProbe(t, src)
     // Partial-column UPDATE SET (Hudi-SQL `UPDATE SET col = expr`):
     // assignments may reference the source row as `s.<col>` and the
