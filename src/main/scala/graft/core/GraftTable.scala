@@ -273,7 +273,7 @@ final class GraftTable private (
     * `empty2null(_part)`, which never semantically matches a
     * user-space ordering), and EliminateSorts then drops the inner
     * sort — file boundaries, not row order, must carry the layout. */
-  private def writeFiles(df: DataFrame, instant: String, delta: Boolean,
+  private[core] def writeFiles(df: DataFrame, instant: String, delta: Boolean,
       maxRecordsPerFile: Option[Long] = None,
       rangeBy: Option[(Int, Seq[Column])] = None,
       dedupLatest: Boolean = false,
@@ -517,18 +517,6 @@ final class GraftTable private (
       commitOrThrow(c)
     }
 
-  /** Service-path write: base files, optional size packing, optional
-    * range-clustered layout (key for plain clustering, a z-value for
-    * multi-column clustering). */
-  private[core] def writeFilesForService(df: DataFrame, instant: String,
-      maxRecordsPerFile: Option[Long] = None,
-      rangeBy: Option[(Int, Seq[Column])] = None,
-      dedupLatest: Boolean = false,
-      dropSoftDeleted: Boolean = false): Seq[DataFileMeta] =
-    writeFiles(df, instant, delta = false,
-      maxRecordsPerFile = maxRecordsPerFile, rangeBy = rangeBy,
-      dedupLatest = dedupLatest, dropSoftDeleted = dropSoftDeleted)
-
   private def commitOrThrow(c: Commit): String = {
     // NO silent renumbering on an instant collision: the data files
     // were already written with rows stamped `_commit_time = c.instant`,
@@ -566,12 +554,11 @@ final class GraftTable private (
     // this insert lands in into the new write (bin packing) instead of
     // stacking another tiny file per commit
     val smallVictims: Seq[DataFileMeta] =
-      if (config.smallFileLimitBytes <= 0 || op == "bulk_insert") Nil
+      if (op == "bulk_insert") Nil
       else {
         // metadata first: only when undersized base files EXIST does the
         // batch pay the group-projection job to see which ones it hits
-        val candidates = snap.liveFiles().filter(f => !f.delta &&
-          f.bytes < config.smallFileLimitBytes)
+        val candidates = smallBaseFiles(snap)
         if (candidates.isEmpty) Nil
         else {
           val groups = batch0
@@ -604,9 +591,17 @@ final class GraftTable private (
     *
     * COW: merge the batch into only the file groups its keys hash to,
     * skipping files whose key range can't intersect the batch
-    * (StatsPruner). MOR: append delta files — zero read amplification.
+    * (StatsPruner); with `smallFileLimitBytes` set, those groups'
+    * undersized base files fold in too. MOR: append delta files — zero
+    * read amplification.
     */
-  def upsert(df: DataFrame, extra: Map[String, String] = Map.empty): String = {
+  def upsert(df: DataFrame, extra: Map[String, String] = Map.empty): String =
+    upsertAs(df, "upsert", extra)
+
+  /** [[upsert]] committed under operation `op`. [[deleteRows]] sends a
+    * MOR table's tombstones through here as `"delete"`. */
+  private def upsertAs(df: DataFrame, op: String,
+      extra: Map[String, String]): String = {
     val snap = log.snapshot()
     val planning = snap.lastInstant.getOrElse("0")
     val instant = log.nextInstantAfter(snap.lastInstant)
@@ -630,7 +625,7 @@ final class GraftTable private (
             delta = false, dedupLatest = true)
         val added = writeFiles(batch, instant, delta = true,
           dedupLatest = true) ++ folded
-        commitValidated(Commit(instant, "commit", "upsert", added = added,
+        commitValidated(Commit(instant, "commit", op, added = added,
           removed = bootVictims.map(_.path),
           schemaJson = evolved.json, extra = extra), planning,
           bootVictims.map(f => (f.partition, f.bucket)).toSet)
@@ -638,14 +633,18 @@ final class GraftTable private (
         val touched = touchedKeyRanges(batch)
         val keyType = evolved.fields.find(_.name == config.keyField)
           .map(_.dataType).getOrElse(StringType)
-        val (rewrite, untouched) = snap.liveFiles().partition(
-          overlapsIncoming(_, touched, keyType))
-        val _ = untouched // files outside the batch's key ranges stay as-is
+        // files outside the batch's key ranges stay as-is, unless they
+        // are undersized base files of a group the batch lands in: those
+        // fold into the rewrite (T5 bin packing) instead of the group
+        // stacking one more small file per commit
+        val overlapping = snap.liveFiles().filter(overlapsIncoming(_, touched, keyType))
+        val rewrite = (overlapping ++ smallBaseFiles(snap).filter(f =>
+          touched.contains((f.partition, f.bucket)))).distinct
         val existing = readFiles(rewrite, evolved)
         // latest-wins + tombstone drop happen inside the write shuffle
         val added = writeFiles(existing.unionByName(batch), instant,
           delta = false, dedupLatest = true, dropSoftDeleted = true)
-        commitValidated(Commit(instant, "commit", "upsert", added = added,
+        commitValidated(Commit(instant, "commit", op, added = added,
           removed = rewrite.map(_.path), schemaJson = evolved.json,
           extra = extra), planning, touched.keySet)
       }
@@ -833,14 +832,7 @@ final class GraftTable private (
     val overlap =
       if (patchCols.isEmpty) Nil
       else {
-        val touched = folded
-          .withColumn("_part", partExpr).withColumn("_bucket", bucketExpr)
-          .groupBy("_part", "_bucket")
-          .agg(min(col(config.keyField)).cast(StringType).as("mn"),
-               max(col(config.keyField)).cast(StringType).as("mx"))
-          .collect()
-          .map(r => (r.getString(0), r.getInt(1)) -> (r.getString(2), r.getString(3)))
-          .toMap
+        val touched = touchedKeyRanges(folded)
         snap.liveFiles().filter(overlapsIncoming(_, touched, keyType))
       }
     val patched =
@@ -937,38 +929,17 @@ final class GraftTable private (
     (Seq(config.keyField, config.orderingField) ++ config.partitionField)
       .foreach(c => require(victims.columns.contains(c),
         s"deleteRows victims must carry identity column '$c'"))
-    val snap = log.snapshot()
-    val planning = snap.lastInstant.getOrElse("0")
-    val instant = log.nextInstantAfter(snap.lastInstant)
-    if (config.isMor) {
+    if (config.isMor)
       // tombstone deltas: same schema, soft-delete flag set, ordering
       // preserved so the tombstone wins the merge at equal ordering via
-      // commit time. Overlapping bootstrap-adopted files fold into
-      // hash-routed groups in the same commit, exactly as in [[upsert]]
-      // — a tombstone for a key held by an unbucketed file would
-      // otherwise never meet it at merge time and the delete would
-      // silently not delete.
-      val (batch0, evolved) = prepare(
-        victims.withColumn(softDel, lit(true))
-          .withColumn(CommitTimeCol, lit(instant)), instant, snap)
-      // persisted: the victims pipeline (typically a filtered table
-      // read) feeds both the fold probe and the tombstone write —
-      // unpersisted it would be recomputed per consumer, like upsert's
-      // batch
-      val batch = batch0.persist()
-      try {
-        val bootVictims = morBootstrapVictims(batch, snap, evolved)
-        val folded =
-          if (bootVictims.isEmpty) Seq.empty
-          else writeFiles(readFiles(bootVictims, evolved), instant,
-            delta = false, dedupLatest = true)
-        val added = writeFiles(batch, instant, delta = true,
-          dedupLatest = true) ++ folded
-        commitValidated(Commit(instant, "commit", "delete", added = added,
-          removed = bootVictims.map(_.path), schemaJson = evolved.json),
-          planning, bootVictims.map(f => (f.partition, f.bucket)).toSet)
-      } finally { batch.unpersist(); () }
-    } else {
+      // the commit time `prepare` stamps. Overlapping bootstrap-adopted
+      // files fold into hash-routed groups in the same commit, as for
+      // any MOR upsert.
+      upsertAs(victims.withColumn(softDel, lit(true)), "delete", Map.empty)
+    else {
+      val snap = log.snapshot()
+      val planning = snap.lastInstant.getOrElse("0")
+      val instant = log.nextInstantAfter(snap.lastInstant)
       val evolved = schemaOf(snap)
       val keyType = evolved.fields.find(_.name == config.keyField)
         .map(_.dataType).getOrElse(StringType)
@@ -1055,6 +1026,15 @@ final class GraftTable private (
       }
     }
 
+  /** Undersized live base files (T5 small-file handling): the files a
+    * write folds into its rewrite when it lands in their group, instead
+    * of adding one more small file beside them. Metadata only; empty
+    * while `smallFileLimitBytes` is 0, the default. */
+  private def smallBaseFiles(snap: TimelineSnapshot): Seq[DataFileMeta] =
+    if (config.smallFileLimitBytes <= 0) Nil
+    else snap.liveFiles().filter(f => !f.delta &&
+      f.bytes < config.smallFileLimitBytes)
+
   /** The live UNBUCKETED bootstrap base files whose partition-wide key
     * range overlaps the prepared MOR batch — the files [[upsert]] /
     * [[deleteRows]] must fold into hash-routed groups alongside their
@@ -1072,11 +1052,13 @@ final class GraftTable private (
     boots.filter(overlapsIncoming(_, touched, keyType))
   }
 
-  /** Per-(partition, bucket) incoming key ranges of a prepared batch —
-    * what [[overlapsIncoming]] probes against. One collect of
-    * O(touched groups). (The COW delete path keeps its own variant:
-    * its input already carries materialized identity columns and may
-    * lack the partition SOURCE column `partExpr` derives from.) */
+  /** Per-(partition, bucket) incoming key ranges of a batch — what
+    * [[overlapsIncoming]] probes against. One collect of O(touched
+    * groups). Used by upsert, upsertPartial, fullSyncCow and the MOR
+    * bootstrap fold. (The COW branch of [[deleteRows]] keeps its own
+    * variant: it aggregates its persisted `(_part, _bucket, identity)`
+    * projection, which no longer holds the partition SOURCE column
+    * `partExpr` derives from.) */
   private def touchedKeyRanges(
       batch: DataFrame): Map[(String, Int), (String, String)] =
     batch

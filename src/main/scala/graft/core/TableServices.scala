@@ -139,8 +139,8 @@ object TableServices {
     // both inside the write shuffle (one exchange for the whole
     // compaction; clustering keeps the separate merge pass because its
     // range layout can't host the key-run dedup)
-    val added = t.writeFilesForService(t.readFiles(victims, sch), instant,
-      dedupLatest = true, dropSoftDeleted = true)
+    val added = t.writeFiles(t.readFiles(victims, sch), instant,
+      delta = false, dedupLatest = true, dropSoftDeleted = true)
     // concurrent delta appends to these groups are fine (they stay
     // live and win merges); only double-compaction conflicts, which
     // the removed-files overlap check catches.
@@ -213,7 +213,7 @@ object TableServices {
     if (live.isEmpty) return None
     val instant = t.log.nextInstant()
     val sch = t.schema
-    val merged = mergeLatest(t, t.readFiles(live, sch))
+    val merged = t.latestWins(t.readFiles(live, sch))
       .filter(!coalesce(col(t.config.softDeleteField), lit(false)))
     val bytes = live.map(_.bytes).sum.max(1)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -223,7 +223,7 @@ object TableServices {
     // layout deterministic when `sortCols` has duplicates)
     val layout = if (sortCols.isEmpty) Seq(col(t.config.keyField))
                  else sortCols.map(col) :+ col(t.config.keyField)
-    val added = t.writeFilesForService(merged, instant,
+    val added = t.writeFiles(merged, instant, delta = false,
       rangeBy = Some((nFiles, layout)))
     // clustering rebuilds groups from a snapshot → any concurrent
     // write into them invalidates the rewrite
@@ -262,7 +262,7 @@ object TableServices {
     if (live.isEmpty) return None
     val instant = t.log.nextInstant()
     val sch = t.schema
-    val merged = mergeLatest(t, t.readFiles(live, sch))
+    val merged = t.latestWins(t.readFiles(live, sch))
       .filter(!coalesce(col(t.config.softDeleteField), lit(false)))
       .persist()
     try {
@@ -276,7 +276,7 @@ object TableServices {
       })
       val bytes = live.map(_.bytes).sum.max(1)
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val added = t.writeFilesForService(merged, instant,
+      val added = t.writeFiles(merged, instant, delta = false,
         rangeBy = Some((nFiles, Seq(z))))
       val groups = live.map(f => (f.partition, f.bucket)).toSet
       Some(t.commitValidated(Commit(instant, "cluster", "zorder",
@@ -758,10 +758,4 @@ object TableServices {
       lastRefroze = last.exists(_.refroze),
       epochAware = graft.operators.IvfPq.isEpochAware(t.spark, path))
   }
-
-  /** Latest-wins on record identity — delegates to the table's own
-    * merge so derived-partition identity (partition VALUE, key) is
-    * honored here exactly as on the write path. */
-  private def mergeLatest(t: GraftTable, df: org.apache.spark.sql.DataFrame) =
-    t.latestWins(df)
 }

@@ -176,8 +176,9 @@ object Dedup {
         "ids", "struct(__x AS doc_a, y AS doc_b)")
         .select(col("p.doc_a"), col("p.doc_b"))
         .distinct()
-      graft.util.Lineage.cut( // materialize before unpersisting the cache
-        jaccardOfCandidates(withHashes.select("id", "hashes"), candidates, threshold))
+      // materialize before unpersisting the cache
+      jaccardOfCandidates(withHashes.select("id", "hashes"), candidates, threshold)
+        .localCheckpoint()
     } finally withHashes.unpersist()
   }
 
@@ -497,7 +498,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"),
           ((col("dot") * col("dot")).cast("double") /
             (col("n2_a") * col("n2_b")).cast("double")).as("cos2"))
-        .transform(graft.util.Lineage.cut) // materialize before unpersisting
+        .localCheckpoint() // materialize before unpersisting
     } finally buckets.unpersist()
   }
 
@@ -602,7 +603,7 @@ object Dedup {
           greatest(col("id_a"), col("id_b")).as("id_b"),
           (col("inter").cast("double") /
             least(col("n_a"), col("n_b")).cast("double")).as("containment"))
-        .transform(graft.util.Lineage.cut) // materialize before unpersisting
+        .localCheckpoint() // materialize before unpersisting
     } finally marked.unpersist()
   }
 

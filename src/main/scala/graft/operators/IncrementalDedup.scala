@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    IO O(colliding files) in the trickle-batch regime (batch sigs
   *    per band < files per band; sigs are uniform hashes, so a bigger
   *    batch's probe set covers every file range and the prune is
-  *    bypassed via `spark.graft.incdedup.maxPruneBandSigs` rather than
+  *    bypassed above [[IncrementalDedup.MaxPruneBandSigs]] rather than
   *    paid for nothing) — and the corpus side streams map-side, no
   *    shuffle of it anywhere;
   *  - batch-internal candidates use the same guarded bucket expansion
@@ -136,9 +136,6 @@ class IncrementalDedup(spark: SparkSession, root: String,
         // be pure driver overhead — above the cap we skip straight to
         // the full scan, which is what the broadcast join streams
         // map-side anyway.
-        val maxPruneSigs = spark.conf
-          .getOption("spark.graft.incdedup.maxPruneBandSigs")
-          .map(_.toInt).getOrElse(250 * 1000)
         // Driver-side (band → batch bsigs) map drives the file pruning.
         // O(batch × numBands) driver memory — bounded by the cap: ONE
         // limit(cap+1) collect both sizes the set and fetches it (a
@@ -146,8 +143,8 @@ class IncrementalDedup(spark: SparkSession, root: String,
         val batchBands: Option[Map[String, Seq[String]]] = {
           val collected = sigs
             .select("band", "bsig").distinct()
-            .limit(maxPruneSigs + 1).collect()
-          if (collected.length > maxPruneSigs) None
+            .limit(IncrementalDedup.MaxPruneBandSigs + 1).collect()
+          if (collected.length > IncrementalDedup.MaxPruneBandSigs) None
           else Some(collected
             .groupBy(_.get(0).toString)
             .map { case (b, rows) => b -> rows.map(_.get(1).toString).toSeq })
@@ -184,16 +181,13 @@ class IncrementalDedup(spark: SparkSession, root: String,
         // store is read through the id point-set prune — O(collisions)
         // collected ids, capped; over the cap we fall back to the full
         // (unpruned, still correct) scan rather than OOM the driver.
-        val maxIds = spark.conf
-          .getOption("spark.graft.incdedup.maxCollectedCandidateIds")
-          .map(_.toLong).getOrElse(2L * 1000 * 1000)
         val nPairs = candidates.count()
         val newHashes = withHashes.select("id", "hashes")
         val allHashes =
           if (!hasHistory) newHashes
           else {
             val stored =
-              if (2 * nPairs <= maxIds) {
+              if (2 * nPairs <= IncrementalDedup.MaxCollectedCandidateIds) {
                 val candIds = candidates
                   .select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
                   .distinct().collect().map(_.get(0).toString).toSeq
@@ -225,4 +219,17 @@ class IncrementalDedup(spark: SparkSession, root: String,
       } finally { sigs.unpersist(); () }
     } finally { withHashes.unpersist(); () }
   }
+}
+
+object IncrementalDedup {
+  /** Above this many distinct (band, bsig) batch signatures the band
+    * index is scanned whole instead of file-pruned: the collected probe
+    * set is driver memory, and a batch that big covers every file
+    * range anyway. */
+  val MaxPruneBandSigs: Int = 250 * 1000
+
+  /** Above this many candidate ids (2 per pair) the hash store is
+    * scanned whole instead of id-pruned, so the driver never collects
+    * an unbounded id set. */
+  val MaxCollectedCandidateIds: Int = 2 * 1000 * 1000
 }

@@ -255,13 +255,10 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
         // their EXISTING verdict rows: point-pruned read when the
         // touched set collects under the cap, full store scan (still
         // O(near-dup docs), never O(corpus)) past it
-        val maxIds = spark.conf
-          .getOption("spark.graft.semdedup.maxCollectedCandidateIds")
-          .map(_.toLong).getOrElse(2L * 1000 * 1000)
         val store =
           if (verdictStore.log.lastInstant().isEmpty)
             None
-          else if (2 * nPairs <= maxIds) {
+          else if (2 * nPairs <= IncrementalSemanticDedup.MaxCollectedCandidateIds) {
             val ids = oldTouched.collect().map(_.get(0).toString).toSeq
             Some(verdictStore.readWhereIn("vec_id", ids))
           } else Some(verdictStore.read())
@@ -313,7 +310,7 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
         // falls back to a full store scan + distributed join (still
         // O(near-dup docs), never a driver OOM); the join is the exact
         // filter either way
-        val capInt = math.min(maxIds, Int.MaxValue.toLong - 1L).toInt
+        val capInt = IncrementalSemanticDedup.MaxCollectedCandidateIds
         val movedGids = gidMoves.select("old_gid").limit(capInt + 1)
           .collect().map(_.get(0).toString).toSeq
         val relabeled =
@@ -395,4 +392,11 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
         if (!df.isEmpty) { dedupBatch(df, idCol, vecCol, baseBatchNo + epoch); () }
       }
       .start()
+}
+
+object IncrementalSemanticDedup {
+  /** Above this many touched ids (2 per pair) the verdict store is
+    * scanned whole instead of id-pruned, so the driver never collects
+    * an unbounded id set. */
+  val MaxCollectedCandidateIds: Int = 2 * 1000 * 1000
 }

@@ -195,13 +195,13 @@ object Selection {
     val docBg = graft.util.Par.spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(prs).as("p"))
       .select(col(idCol), col("p.v").as("v"), col("p.w").as("w"))
-      .transform(graft.util.Lineage.cut)
+      .localCheckpoint()
     // four consumers read the type relation (cv, n1w, n1all, lp);
     // checkpoint it once or each re-pays the corpus bigram shuffle
     // (measured 177 s → 56 s at the 100× corpus). MEMORY_AND_DISK
     // blocks, so at extreme scale this spills rather than OOMs.
     val types = docBg.groupBy("v", "w").agg(count(lit(1)).as("c_vw"))
-      .transform(graft.util.Lineage.cut)
+      .localCheckpoint()
     val cv = types.groupBy("v")
       .agg(sum("c_vw").as("cv"), count(lit(1)).as("n1v"))
     val n1w = types.groupBy("w").agg(count(lit(1)).as("n1w"))

@@ -39,6 +39,27 @@ class SmallFileAndValidationSpec extends AnyFunSuite {
       Seq("key", "symbol", "ts", "date", "volume")))
   }
 
+  test("small-file limit folds a COW upsert's new keys into its groups' undersized base files") {
+    val t = GraftTable.create(spark, tmp(), TableConfig(
+      name = "packedup", keyField = "key", orderingField = "ts",
+      partitionField = Some("date"), numBuckets = 2,
+      smallFileLimitBytes = 10 << 20))
+    val days = Seq("2018/08/31", "2018/09/01")
+    // rising keys: no batch's key range overlaps a stored file's, so
+    // only bin packing keeps a group from stacking one file per upsert
+    val batches = (1 to 10).map(i => (1 to 4).map(j =>
+      (f"k$i%02d_$j", "S", s"t$i", days(j % 2), (10 * i + j).toLong)))
+    batches.foreach(b => t.upsert(b.toDF("key", "symbol", "ts", "date", "volume")))
+    val filesPerGroup = t.log.liveFiles().groupBy(f => (f.partition, f.bucket))
+      .map { case (g, fs) => g -> fs.size }
+    assert(filesPerGroup.size == 4)
+    assert(filesPerGroup.values.forall(_ == 1), filesPerGroup)
+    val model = batches.flatten.map(r => r._1 -> r).toMap
+    val got = t.read().select("key", "symbol", "ts", "date", "volume")
+      .as[(String, String, String, String, Long)].collect()
+    assert(got.length == model.size && got.toSet == model.values.toSet)
+  }
+
   test("ValidateDatasetNode analog: table state equals accumulated input") {
     val t = GraftTable.create(spark, tmp(), TableConfig(
       name = "val", keyField = "key", orderingField = "ts",

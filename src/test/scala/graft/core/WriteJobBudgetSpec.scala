@@ -1,0 +1,65 @@
+package graft.core
+
+import graft.Session
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The Spark jobs one keyed write costs. Each budget is an upper bound
+  * at the count the write path ran before the MOR delete path was
+  * folded into upsert's, so a change that adds a job to `upsert` or
+  * `deleteRows` fails here. */
+class WriteJobBudgetSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = Session.local(4)
+  import spark.implicits._
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener events are async; give the bus a moment to drain
+      Thread.sleep(1000)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
+
+  private def rows(t: GraftTable): Set[(Long, String, Long, Long)] =
+    t.read().select("id", "p", "ver", "v").as[(Long, String, Long, Long)]
+      .collect().toSet
+
+  /** Upserts 2 updates and 2 new keys into a partitioned table of 40
+    * rows, then deletes 2 keys, and checks each write's job count. */
+  private def budget(tableType: String, upsertJobs: Int, deleteJobs: Int): Unit = {
+    val t = GraftTable.create(spark,
+      graft.util.TempDirs.create(s"graft-budget-$tableType-").toString,
+      TableConfig(name = s"budget_$tableType", keyField = "id",
+        orderingField = "ver", partitionField = Some("p"), numBuckets = 2,
+        tableType = tableType))
+    val base = (0L until 40L).map(i => (i, s"p${i % 4}", 1L, i))
+    t.insert(base.toDF("id", "p", "ver", "v"))
+    val batch = Seq((1L, "p1", 2L, 70L), (6L, "p2", 2L, 71L),
+      (100L, "p0", 1L, 72L), (101L, "p1", 1L, 73L))
+    val up = jobsOf(t.upsert(batch.toDF("id", "p", "ver", "v")))
+    val del = jobsOf(t.deleteRows(t.read().filter(col("id").isin(2L, 7L))))
+    val byId = (base ++ batch).map(r => r._1 -> r).toMap -- Seq(2L, 7L)
+    info(s"$tableType: upsert $up Spark jobs, deleteRows $del Spark jobs")
+    assert(rows(t) == byId.values.toSet)
+    assert(up <= upsertJobs, s"$tableType upsert ran $up Spark jobs")
+    assert(del <= deleteJobs, s"$tableType deleteRows ran $del Spark jobs")
+  }
+
+  test("COW upsert and deleteRows stay within their Spark job budgets") {
+    budget(TableConfig.Cow, upsertJobs = 5, deleteJobs = 7)
+  }
+
+  test("MOR upsert and deleteRows stay within their Spark job budgets") {
+    budget(TableConfig.Mor, upsertJobs = 3, deleteJobs = 3)
+  }
+}
