@@ -327,12 +327,17 @@ final class GraftTable private (
       if (dropSoftDeleted) d.filter(!coalesce(col(softDel), lit(false)))
       else d
     }
-    val writer0 = (config.keyField +: config.bloomColumns).distinct
-      // T7 key-lookup index: parquet bloom filter on the record key —
-      // upsert/point-lookup scans skip row groups without the key
-      // (the reference's hoodie.index.type BLOOM analog,
-      // spark/conf/hudi-defaults.conf:25) — plus every column the user
-      // put a CREATE INDEX ... USING bloom on
+    // T7 key-lookup index: parquet bloom filter on the record key of
+    // every BASE file — upsert/point-lookup scans skip row groups
+    // without the key (the reference's hoodie.index.type BLOOM analog,
+    // spark/conf/hudi-defaults.conf:25) — plus every column the user
+    // put a CREATE INDEX ... USING bloom on. Delta files carry none: the
+    // MOR merge reads them whole (no pushed filter), so a bloom there
+    // would be pure bytes (at least 64 KiB, the smallest adaptive
+    // candidate, beside a few KiB of rows from a small upsert);
+    // compaction output is a base file and carries the index again.
+    val blooms = if (delta) Nil else (config.keyField +: config.bloomColumns).distinct
+    val writer0 = blooms
       .foldLeft(shuffled.write.partitionBy("_part", "_bucket").mode("overwrite")) {
         (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true") }
       // adaptive sizing: without it parquet-mr sizes every bloom for
@@ -1491,63 +1496,44 @@ final class GraftTable private (
     }
   }
 
-  /** Scan with driver-side file skipping on a stats column: only files
-    * whose [min,max] may contain a value in [lo,hi] are listed (the
-    * Delta-stats data-skipping analog, SURVEY.md §4). Filters must still
-    * be applied by the caller — this narrows IO, not semantics.
-    *
-    * MOR pruning is GROUP-granular, not file-granular: dropping a single
-    * delta file before the latest-wins merge would resurrect the older
-    * in-range version of any key whose newest version moved out of
-    * [lo,hi] (or was tombstoned). A group is scanned in full if any of
-    * its live files may contain the range; a group is skipped only when
-    * no file of the group can — in which case no key in the group has a
-    * CURRENT version in range either, so skipping is semantics-free. */
-  def readWhereBetween(column: String, lo: Option[String], hi: Option[String]): DataFrame = {
-    val snap = log.snapshot()
-    val s = schemaAt(snap, None)
-    val dt = s.fields.find(_.name == column).map(_.dataType).getOrElse(StringType)
-    val live = snap.liveFiles()
-    if (config.isMor) {
-      val survivingGroups = live
-        .filter(f => StatsPruner.mayContain(dt, f.stats.get(column), lo, hi))
-        .map(f => (f.partition, f.bucket)).toSet
-      merged(live.filter(f => survivingGroups.contains((f.partition, f.bucket))), s)
-    } else
-      merged(live.filter(f => StatsPruner.mayContain(dt, f.stats.get(column), lo, hi)), s)
-  }
+  /** Scan with driver-side file skipping on a column: only files that
+    * may hold a value in [lo,hi] are listed (the Delta-stats
+    * data-skipping analog, SURVEY.md §4), under the one pruning rule of
+    * every scan ([[Pruning]]). A file set holding delta files is pruned
+    * by whole (partition, bucket) group: dropping a single delta file
+    * before the latest-wins merge would resurrect the older in-range
+    * version of a key whose newest version moved out of range. Filters
+    * must still be applied by the caller — this narrows IO, not
+    * semantics. */
+  def readWhereBetween(column: String, lo: Option[String], hi: Option[String]): DataFrame =
+    readPruned(_.between(column, lo, hi))
 
-  /** Point-set twin of [[readWhereBetween]]: only files whose [min,max]
-    * stats may contain AT LEAST ONE of `values` are listed (binary
-    * search per file — the bloom/point-lookup analog of range skipping,
-    * effective once [[TableServices.cluster]] has range-laid the column
-    * so each file owns a narrow slice). `byPartition`, when given, maps
-    * partition value → that partition's candidate values; partitions
-    * absent from the map are skipped whole (the caller enumerated the
-    * partitions it cares about). `values` sizes the DRIVER's pruning
-    * work — callers pass bounded sets (e.g. a batch's keys), never a
-    * corpus. Filters must still be applied by the caller — this narrows
-    * IO, not semantics. MOR pruning is group-granular like
-    * [[readWhereBetween]], and for the same reason. */
+  /** Point-set twin of [[readWhereBetween]]: only files that may hold
+    * AT LEAST ONE of `values` are listed — key values additionally by
+    * their routing bucket, and stats by binary search per file, the
+    * bloom/point-lookup analog of range skipping (effective once
+    * [[TableServices.cluster]] has range-laid the column so each file
+    * owns a narrow slice). `byPartition`, when given, maps partition
+    * value → that partition's candidate values; partitions absent from
+    * the map are skipped whole (the caller enumerated the partitions it
+    * cares about). `values` sizes the DRIVER's pruning work — callers
+    * pass bounded sets (e.g. a batch's keys), never a corpus. */
   def readWhereIn(column: String, values: Seq[String],
-      byPartition: Option[Map[String, Seq[String]]] = None): DataFrame = {
+      byPartition: Option[Map[String, Seq[String]]] = None): DataFrame =
+    readPruned { p =>
+      byPartition match {
+        case Some(m) =>
+          val perPart = m.map { case (part, vs) => part -> p.valuesIn(column, vs) }
+          f => perPart.get(f.partition).exists(_(f))
+        case None => p.valuesIn(column, values)
+      }
+    }
+
+  private def readPruned(test: Pruning => Pruning.FileTest): DataFrame = {
     val snap = log.snapshot()
     val s = schemaAt(snap, None)
-    val dt = s.fields.find(_.name == column).map(_.dataType).getOrElse(StringType)
-    val sortAll = values.toArray.sortWith(StatsPruner.compare(dt, _, _) < 0)
-    val sortedByPart = byPartition.map(_.map { case (p, vs) =>
-      p -> vs.toArray.sortWith(StatsPruner.compare(dt, _, _) < 0) })
-    def mayMatch(f: DataFileMeta): Boolean = sortedByPart match {
-      case Some(m) => m.get(f.partition)
-        .exists(StatsPruner.mayContainAny(dt, f.stats.get(column), _))
-      case None => StatsPruner.mayContainAny(dt, f.stats.get(column), sortAll)
-    }
     val live = snap.liveFiles()
-    if (config.isMor) {
-      val survivingGroups = live.filter(mayMatch)
-        .map(f => (f.partition, f.bucket)).toSet
-      merged(live.filter(f => survivingGroups.contains((f.partition, f.bucket))), s)
-    } else merged(live.filter(mayMatch), s)
+    merged(Pruning.select(live, byGroup = live.exists(_.delta))(test(Pruning.of(this, s))), s)
   }
 
   /** Partition listing (SHOW PARTITIONS analog, README.md:372-374). */

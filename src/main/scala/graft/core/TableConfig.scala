@@ -52,7 +52,8 @@ case class TableConfig(
     /** Named secondary indexes (Hudi 1.0 `CREATE INDEX` analog):
       * name → "kind:column" with kind ∈ {bloom, column_stats}.
       * `bloom` puts a parquet bloom filter on the column in every
-      * future base/delta file (row-group point-lookup skipping);
+      * future base file (row-group point-lookup skipping; MOR delta
+      * files carry no bloom, their merge reads them whole);
       * `column_stats` adds the column to the commit-log min/max stats
       * (file-level range skipping, the metadata-table column_stats
       * partition analog). Existing files index on the next rewrite —
@@ -76,8 +77,8 @@ case class TableConfig(
   private def indexCols(kind: String): Seq[String] =
     indexes.toSeq.sorted.collect {
       case (_, v) if v.startsWith(kind + ":") => v.substring(kind.length + 1) }
-  /** Columns carrying a parquet bloom filter (beyond the key, which
-    * always has one). */
+  /** Columns carrying a parquet bloom filter in base files (beyond the
+    * key, which always has one there). */
   def bloomColumns: Seq[String] = indexCols("bloom")
   /** statsColumns plus every column_stats-indexed column. */
   def effectiveStatsColumns: Seq[String] =

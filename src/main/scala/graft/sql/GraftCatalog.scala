@@ -14,20 +14,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouseDir: String) {
 
   Files.createDirectories(Paths.get(warehouseDir))
 
-  private def rootOf(name: String): String = {
-    // table names resolve to warehouse subpaths — reject anything that
-    // is not a SINGLE path component, CENTRALLY, so an API-level name
-    // like '../../x' can never escape the warehouse (registerTable
-    // would delete/plant a symlink outside it and dropTable would
-    // walk-delete the resolved tree). Deliberately containment-shaped
-    // rather than the SQL dialect's \w+ grammar: API-created names
-    // with '-'/'.' pre-date validation and must stay reachable (and
-    // droppable), while every traversal spelling is one of these.
-    require(name.nonEmpty && name != "." && name != ".." &&
-        !name.contains('/') && !name.contains('\\'),
-      s"invalid table name '$name' — must be a single path component")
-    Paths.get(warehouseDir, name).toString
-  }
+  private def rootOf(name: String): String = GraftCatalog.rootIn(warehouseDir, name)
 
   /** NEW names must satisfy the \w+ identifier grammar: the SQL
     * surface registers every catalog table as a temp view, and Spark
@@ -111,10 +98,7 @@ final class GraftCatalog(val spark: SparkSession, val warehouseDir: String) {
     // callers get the same cleanup as SQL DROP TABLE.
     Seq(name, s"${name}_ro", s"${name}_rt")
       .foreach(v => { spark.catalog.dropTempView(v); () })
-    // a REGISTERED table is a symlink: dropping it un-registers (the
-    // linked table's own files are not ours to delete)
-    if (Files.isSymbolicLink(root)) { Files.delete(root); return }
-    graft.util.Fs.walkSeq(root).reverse.foreach(Files.deleteIfExists(_))
+    GraftCatalog.deleteRoot(root)
   }
 
   /** D9: SHOW TABLES. */
@@ -196,6 +180,33 @@ final class GraftCatalog(val spark: SparkSession, val warehouseDir: String) {
       syncedState(n) = sig
     }
   }
+}
+
+object GraftCatalog {
+
+  /** The root of table `name` in `warehouse`, for this catalog and the
+    * DSv2 [[GraftTableCatalog]] alike. Table names resolve to warehouse
+    * subpaths, so anything that is not a SINGLE path component is
+    * rejected here, centrally: a name like '../../x' can never escape
+    * the warehouse (CREATE would plant a table outside it, registerTable
+    * a symlink, and DROP would walk-delete the resolved tree).
+    * Deliberately containment-shaped rather than the SQL dialect's \w+
+    * grammar: API-created names with '-'/'.' pre-date validation and
+    * must stay reachable (and droppable), while every traversal
+    * spelling is one of these. */
+  def rootIn(warehouse: String, name: String): String = {
+    require(name.nonEmpty && name != "." && name != ".." &&
+        !name.contains('/') && !name.contains('\\'),
+      s"invalid table name '$name' — must be a single path component")
+    Paths.get(warehouse, name).toString
+  }
+
+  /** Delete the table at `root`. A REGISTERED table is a symlink (maybe
+    * a dangling one): dropping it un-registers, the linked table's own
+    * files are not ours to delete. */
+  def deleteRoot(root: java.nio.file.Path): Unit =
+    if (Files.isSymbolicLink(root)) Files.delete(root)
+    else graft.util.Fs.walkSeq(root).reverse.foreach(Files.deleteIfExists(_))
 }
 
 /** Metadata/observability export (S15 — the LakeView-extractor analog,

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.{DataFileMeta, GraftTable, TableConfig}
+import graft.core.{DataFileMeta, GraftTable, Pruning, TableConfig}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.{Column => Column2}
@@ -65,7 +65,7 @@ final class GraftDsv2Table(val graft: GraftTable, delegate: Table,
     // prune on the raw source column (its value is not the partition
     // value); they range-prune via the source column's stats instead
     new GraftFileSkippingScanBuilder(graft.spark, name(), graft.root,
-      scanFiles, scanSchema, graft.config.scanPartitionField, options)
+      scanFiles, scanSchema, Pruning.of(graft, scanSchema), options)
 }
 
 /** Realtime DSv2 table over a chosen MOR file set: reads go through

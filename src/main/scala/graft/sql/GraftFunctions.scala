@@ -1,7 +1,6 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
 
@@ -57,9 +56,6 @@ final class GraftBoundBucket(keyType: DataType)
   override def canonicalName(): String = "graft.bucket"
   override def isResultNullable: Boolean = false
 
-  override def produceResult(input: InternalRow): Integer = {
-    val n = input.getInt(0)
-    val h = XxHash64Function.hash(input.get(1, keyType), keyType, 42L)
-    (((h % n) + n) % n).toInt
-  }
+  override def produceResult(input: InternalRow): Integer =
+    graft.core.Pruning.bucketOf(input.get(1, keyType), keyType, input.getInt(0))
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.{DataFileMeta, GraftTable, TableConfig}
+import graft.core.{DataFileMeta, GraftTable, Pruning, TableConfig}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -48,12 +48,12 @@ import scala.jdk.CollectionConverters._
   * columns); filters are NOT evaluated below the merge — a stale base
   * row passing a filter must still lose to its delta version that
   * fails it, so Spark applies all predicates above the scan. Pushed
-  * filters DO prune at group granularity at plan time (see
-  * `GraftMorScanBuilder.pushFilters`): dropping a whole (partition,
-  * bucket) group is merge-safe, dropping a single file is not. Key
-  * equality additionally prunes by the bucket routing hash, and a
-  * selective join prunes groups at RUNTIME (SupportsRuntimeV2Filtering)
-  * the same way.
+  * filters, and at runtime a selective join's key values
+  * (SupportsRuntimeV2Filtering), select WHOLE (partition, bucket)
+  * groups through [[graft.core.Pruning]], the rule every graft scan
+  * shares: partition values, key bucket routing (bootstrap files
+  * exempt) and min/max stats. Dropping a whole group is merge-safe,
+  * dropping a single file is not.
   */
 final class GraftMorScanBuilder(
     spark: SparkSession,
@@ -76,14 +76,7 @@ final class GraftMorScanBuilder(
 
   override def pruneColumns(s: StructType): Unit = { required = s }
 
-  /** Filters prune at GROUP granularity only, and every filter stays
-    * post-scan. Dropping a single file before the latest-wins merge
-    * would resurrect stale versions (a stale base row passing a filter
-    * must still lose to its delta version that fails it) — but a whole
-    * group can go: the current version of any row is a physical row in
-    * exactly one of the group's files, so if NO file's stats admit the
-    * conjunction, no current row of the group can match. Same rule the
-    * API layer's readWhereBetween applies; this brings it to SQL. */
+  /** Every filter stays post-scan; [[build]] only selects groups. */
   override def pushFilters(
       f: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
@@ -95,53 +88,15 @@ final class GraftMorScanBuilder(
       Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
     Array.empty
 
-  /** Buckets a top-level key-equality filter allows (None = filter is
-    * not key-equality-shaped). Key min/max stats barely prune across
-    * buckets — every bucket spans nearly the full key range — but the
-    * ROUTING hash is exact: key k only ever lives in bucket(k). */
-  private def keyBuckets(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Set[Int]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val keyDt = tableSchema(keyField).dataType
-    def bucketOf(v: Any): Int = {
-      val h = XxHash64Function.hash(v, keyDt, 42L)
-      (((h % numBuckets) + numBuckets) % numBuckets).toInt
-    }
-    if (numBuckets <= 0) return None
-    e match {
-      case EqualTo(a: AttributeReference, Literal(v, dt))
-          if a.name == keyField && dt == keyDt && v != null =>
-        Some(Set(bucketOf(v)))
-      case EqualTo(Literal(v, dt), a: AttributeReference)
-          if a.name == keyField && dt == keyDt && v != null =>
-        Some(Set(bucketOf(v)))
-      case In(a: AttributeReference, vs)
-          if a.name == keyField &&
-            vs.forall { case Literal(v, dt) => dt == keyDt && v != null
-                        case _ => false } =>
-        Some(vs.map { case Literal(v, _) => bucketOf(v) }.toSet)
-      case InSet(a: AttributeReference, vs) if a.name == keyField =>
-        if (vs.exists(_ == null)) None else Some(vs.map(bucketOf).toSet)
-      case _ => None
-    }
-  }
-
   override def build(): Scan = {
-    val allowedBuckets: Option[Set[Int]] =
-      filters.flatMap(keyBuckets).reduceOption(_ intersect _)
-    val surviving =
-      if (filters.isEmpty) live
-      else live.groupBy(f => (f.partition, f.bucket)).filter { case ((_, b), fs) =>
-        allowedBuckets.forall(_.contains(b)) &&
-          fs.exists(f => filters.forall(
-            StatsFilterEval.mayMatch(f, _, tableSchema, partitionField)))
-      }.values.flatten.toSeq
-    GraftMorScan.lastStaticPlanned.put(tableName,
-      surviving.groupBy(f => (f.partition, f.bucket)).size)
+    val surviving = Pruning.select(live, byGroup = true)(pruning.pushed(filters))
+    Pruning.lastStaticPlanned.put(tableName, Pruning.units(surviving, byGroup = true))
     new GraftMorScan(spark, tableName, root,
       surviving, tableSchema, keyField, orderingField, softDeleteField,
       required, partitionField, numBuckets, range)
   }
+
+  private val pruning = Pruning(tableSchema, partitionField, keyField, numBuckets)
 }
 
 final class GraftMorScan(
@@ -240,81 +195,26 @@ final class GraftMorScan(
 
   // ---- runtime filtering (DPP / record-level-index analog) ----------
   // A join whose build side broadcasts hands this scan its join-key
-  // values at runtime (Spark's V2 runtime filtering). Group-granular
-  // pruning is merge-safe: a key lives in exactly one (partition,
-  // bucket) file group, so a group none of whose partition value /
-  // bucket routing / per-file key ranges can match any probed value
-  // holds no current version of any probed key — dropping it whole
-  // cannot change the merged result. Partition values prune like
-  // classic dynamic partition pruning; KEY values prune via the same
-  // xxhash64 bucket routing the write path uses plus min/max key
-  // stats — the Hudi record-level-index role, at zero index cost.
+  // values at runtime (Spark's V2 runtime filtering); groups that can
+  // hold none of them are dropped whole, as at plan time.
 
-  private var runtimeKept: Option[Array[((String, Int), Seq[DataFileMeta])]] = None
+  private var planned: Seq[DataFileMeta] = live
 
   override def filterAttributes():
-      Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    import org.apache.spark.sql.connector.expressions.Expressions
-    if (numBuckets <= 0) return Array.empty
-    // only columns present in the scan OUTPUT: Spark resolves these
-    // against it and fails the query otherwise (pruned-out columns
-    // can't carry a runtime filter anyway)
-    (partitionField.toSeq :+ keyField)
-      .filter(required.fieldNames.contains)
-      .map(Expressions.column).toArray
-  }
+      Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    pruning.filterAttributes(live, required)
 
   override def filter(predicates: Array[
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val kept = groups.filter { case ((p, b), fs) =>
-      predicates.forall(pr => groupMayMatch(p, b, fs, pr))
-    }
-    if (kept.length < groups.length) runtimeKept = Some(kept)
-    GraftMorScan.lastRuntimePlanned.put(tableName, kept.length)
-    ()
+    planned = Pruning.select(live, byGroup = true)(pruning.runtime(predicates.toSeq))
+    Pruning.lastRuntimePlanned.put(tableName, Pruning.units(planned, byGroup = true))
   }
 
-  private def keyDt = tableSchema(keyField).dataType
+  private val pruning = Pruning(tableSchema, partitionField, keyField, numBuckets)
 
-  /** Conservative: unknown predicate shapes keep the group. */
-  private def groupMayMatch(p: String, b: Int, fs: Seq[DataFileMeta],
-      pr: org.apache.spark.sql.connector.expressions.filter.Predicate): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-    if (pr.name() != "IN" && pr.name() != "=") return true
-    val children = pr.children()
-    if (children.isEmpty || !children(0).isInstanceOf[NamedReference]) return true
-    val attr = children(0).asInstanceOf[NamedReference].fieldNames.mkString(".")
-    val lits = children.drop(1)
-    if (!lits.forall(_.isInstanceOf[V2Literal[_]])) return true
-    val values = lits.map(_.asInstanceOf[V2Literal[_]])
-    // render through StatsLit.str like the COW runtime filter: a
-    // date/timestamp V2 literal's value is a catalyst INT/LONG whose
-    // toString ("19877") never equals the stored ISO string — blind
-    // toString would prune EVERY group and silently drop rows; None
-    // from StatsLit.str means "can't render" → keep the group
-    val rendered = values.map(v => StatsLit.str(v.value))
-    if (rendered.exists(_.isEmpty)) return true
-    if (partitionField.contains(attr)) {
-      // partition dirs store cast-to-string values ("__null__" = null)
-      rendered.flatten.exists(_ == p)
-    } else if (attr == keyField) {
-      val bucketHit = values.exists { v =>
-        val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-          .hash(v.value, v.dataType, 42L)
-        (((h % numBuckets) + numBuckets) % numBuckets).toInt == b
-      }
-      bucketHit && {
-        val sorted = rendered.flatten
-          .sortWith((a, x) => graft.core.StatsPruner.compare(keyDt, a, x) < 0)
-          .toArray
-        fs.exists(f => graft.core.StatsPruner.mayContainAny(keyDt,
-          Some(graft.core.ColStat(f.minKey, f.maxKey, 0L)), sorted))
-      }
-    } else true
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    runtimeKept.getOrElse(groups).map { case ((p, b), fs) =>
+  override def planInputPartitions(): Array[InputPartition] = {
+    val kept = planned.map(f => (f.partition, f.bucket)).toSet
+    groups.filter(g => kept.contains(g._1)).map { case ((p, b), fs) =>
       val deltaBytes = fs.filter(_.delta).map(_.bytes).sum
       if (deltaBytes > maxDeltaBytes)
         throw new IllegalStateException(
@@ -334,6 +234,7 @@ final class GraftMorScan(
         ctLo = range.map(_._1), ctHi = range.map(_._2),
         partKey = key)
     }.toArray[InputPartition]
+  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // superset actually read: requested ∪ merge columns, table order
@@ -374,12 +275,6 @@ object GraftMorScan {
       range: Option[(String, String)]): DataFrame =
     DatasetBridge.ofRows(t.spark, DataSourceV2Relation.create(
       new GraftMorDsv2Table(t, t.config.name, files, schema, range), None, None))
-
-  /** Test observability: groups planned after the last runtime filter,
-    * by table name. */
-  val lastRuntimePlanned = new java.util.concurrent.ConcurrentHashMap[String, Int]()
-  /** Test observability: groups surviving plan-time filter pruning. */
-  val lastStaticPlanned = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 }
 
 final case class FileSlice(path: String, bytes: Long)

@@ -1,9 +1,9 @@
 package graft.sql
 
-import graft.core.{DataFileMeta, StatsPruner}
+import graft.core.{DataFileMeta, Pruning, StatsPruner}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Or => COr, _}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
@@ -34,12 +34,13 @@ final class GraftFileSkippingScanBuilder(
     root: String,
     files: Seq[DataFileMeta],
     schema: StructType,
-    partitionField: Option[String],
+    pruning: Pruning,
     options: CaseInsensitiveStringMap)
   extends ScanBuilder with SupportsPushDownCatalystFilters
   with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
   private var filters: Seq[Expression] = Nil
+  private def partitionField = pruning.partitionField
   private var required: Option[StructType] = None
   private var countPushed = false
 
@@ -152,7 +153,8 @@ final class GraftFileSkippingScanBuilder(
             answers.map(_._1).mkString(", ") + ")"
       }
     }
-    val surviving = files.filter(f => filters.forall(mayMatch(f, _)))
+    val surviving = Pruning.select(files, byGroup = false)(pruning.pushed(filters))
+    Pruning.lastStaticPlanned.put(tableName, surviving.size)
     def rebuild(fs: Seq[DataFileMeta]): Scan = {
       val pt = ParquetTable(tableName, spark, options,
         fs.map(f => s"$root/${f.path}"), Some(schema),
@@ -162,118 +164,27 @@ final class GraftFileSkippingScanBuilder(
       required.foreach(sb.pruneColumns)
       sb.build()
     }
-    // attributes a runtime (join-driven) filter can prune files on:
-    // the partition value plus every column carrying commit-log stats
-    val runtimeAttrs =
-      (partitionField.toSeq ++ files.flatMap(_.stats.keys)).distinct
-    new GraftRuntimeFilteringScan(tableName, rebuild, schema,
-      partitionField, runtimeAttrs, surviving)
+    new GraftRuntimeFilteringScan(tableName, rebuild, pruning, files.size, surviving)
   }
-
-  // ---- conservative stats evaluation --------------------------------
 
   private def dtOf(attr: String): Option[DataType] =
     schema.fields.find(_.name == attr).map(_.dataType)
-
-  private def mayMatch(f: DataFileMeta, e: Expression): Boolean =
-    StatsFilterEval.mayMatch(f, e, schema, partitionField)
-}
-
-/** Conservative per-file evaluation of catalyst filters against
-  * commit-log stats (shared by the COW file-skipping builder and the
-  * MOR group-pruning builder). `true` = the file may hold a matching
-  * row — unknown shapes, unrenderable literals, or missing stats keep
-  * the file; only provable non-overlap prunes. */
-private[sql] object StatsFilterEval {
-
-  /** Literal rendered the way stats were stored (`cast(col as string)`
-    * of the value); None = not comparable → never prune on it. */
-  // ONE literal-rendering table (StatsLit.str) for the static and
-  // runtime pruning paths — a second copy here had already drifted
-  // once and diverging them reintroduces the date/timestamp bug
-  def litStr(v: Any): Option[String] = StatsLit.str(v)
-
-  def mayMatch(f: DataFileMeta, e: Expression, schema: StructType,
-      partitionField: Option[String]): Boolean = e match {
-    case CAnd(l, r) => mayMatch(f, l, schema, partitionField) &&
-      mayMatch(f, r, schema, partitionField)
-    case COr(l, r) => mayMatch(f, l, schema, partitionField) ||
-      mayMatch(f, r, schema, partitionField)
-    case EqualTo(a: AttributeReference, Literal(v, _)) =>
-      eqMay(f, a.name, v, schema, partitionField)
-    case EqualTo(Literal(v, _), a: AttributeReference) =>
-      eqMay(f, a.name, v, schema, partitionField)
-    case GreaterThan(a: AttributeReference, Literal(v, _)) =>
-      cmpMay(f, a.name, litStr(v), None, schema, partitionField)
-    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-      cmpMay(f, a.name, litStr(v), None, schema, partitionField)
-    case LessThan(a: AttributeReference, Literal(v, _)) =>
-      cmpMay(f, a.name, None, litStr(v), schema, partitionField)
-    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-      cmpMay(f, a.name, None, litStr(v), schema, partitionField)
-    case GreaterThan(Literal(v, _), a: AttributeReference) =>
-      cmpMay(f, a.name, None, litStr(v), schema, partitionField)
-    case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) =>
-      cmpMay(f, a.name, None, litStr(v), schema, partitionField)
-    case LessThan(Literal(v, _), a: AttributeReference) =>
-      cmpMay(f, a.name, litStr(v), None, schema, partitionField)
-    case LessThanOrEqual(Literal(v, _), a: AttributeReference) =>
-      cmpMay(f, a.name, litStr(v), None, schema, partitionField)
-    case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.isEmpty || vs.exists { case Literal(v, _) =>
-        eqMay(f, a.name, v, schema, partitionField) }
-    case InSet(a: AttributeReference, vs) =>
-      vs.isEmpty || vs.exists(v => eqMay(f, a.name, v, schema, partitionField))
-    case _ => true // unknown shape: keep the file
-  }
-
-  private def eqMay(f: DataFileMeta, attr: String, v: Any,
-      schema: StructType, partitionField: Option[String]): Boolean =
-    if (partitionField.contains(attr)) litStr(v).forall(_ == f.partition)
-    else { val s = litStr(v); cmpMay(f, attr, s, s, schema, partitionField) }
-
-  private def cmpMay(f: DataFileMeta, attr: String,
-      lo: Option[String], hi: Option[String],
-      schema: StructType, partitionField: Option[String]): Boolean =
-    if (partitionField.contains(attr)) true // only equality prunes partitions
-    else if (lo.isEmpty && hi.isEmpty) true
-    else schema.fields.find(_.name == attr).map(_.dataType).forall(dt =>
-      StatsPruner.mayContain(dt, f.stats.get(attr), lo, hi))
-}
-
-/** Literal → the string form commit-log stats store (`cast(col as
-  * string)` of the value). None = representation differs (timestamps,
-  * dates, binary) → never prune on it. */
-private[sql] object StatsLit {
-  def str(v: Any): Option[String] = v match {
-    case null => None
-    case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-    case b: Boolean => Some(b.toString)
-    case n @ (_: Byte | _: Short | _: Int | _: Long | _: Float | _: Double) =>
-      Some(n.toString)
-    case d: Decimal => Some(d.toString)
-    case d: java.math.BigDecimal => Some(d.toString)
-    case _ => None
-  }
 }
 
 /** Runtime-filterable wrapper over the commit-log-selected parquet
   * scan: Spark's V2 runtime filtering (the DSv2 dynamic-partition-
   * pruning path) executes a selective join's build side first and
-  * hands this scan the observed join-key values; files whose partition
-  * value or per-column [min,max] stats cannot contain ANY probed value
-  * are dropped BEFORE the probe side is read. At 100 TB this is the
-  * fact-scan saver: `fact ⋈ (dim WHERE ...)` reads only the fact files
-  * the surviving dim keys can live in — classic DPP on the partition
-  * column, and stats-range pruning (the record-index analog) on every
-  * stats-bearing column. Pruning is conservative-only: unknown
-  * predicate shapes or unparseable literals keep the file. */
+  * hands this scan the observed join-key values; files that cannot
+  * hold ANY probed value under [[Pruning]]'s rule (partition value,
+  * key bucket routing, min/max stats) are dropped BEFORE the probe
+  * side is read. At 100 TB this is the fact-scan saver: `fact ⋈ (dim
+  * WHERE ...)` reads only the fact files the surviving dim keys can
+  * live in. */
 final class GraftRuntimeFilteringScan(
     tableName: String,
     rebuild: Seq[DataFileMeta] => Scan,
-    schema: StructType,
-    partitionField: Option[String],
-    attrs: Seq[String],
+    pruning: Pruning,
+    total: Int,
     initial: Seq[DataFileMeta])
   extends Scan
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -290,7 +201,7 @@ final class GraftRuntimeFilteringScan(
   override def readSchema(): StructType = delegate.readSchema()
   override def toBatch: Batch = delegate.toBatch
   override def description(): String =
-    s"GraftRuntimeFilterable($tableName, files=${files.size}/${initial.size}) " +
+    s"GraftRuntimeFilterable($tableName, files=${files.size}/$total) " +
       delegate.description()
 
   override def estimateStatistics(): Statistics = delegate match {
@@ -302,38 +213,12 @@ final class GraftRuntimeFilteringScan(
   }
 
   override def filterAttributes():
-      Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // only columns in the scan OUTPUT — Spark resolves filter
-    // attributes against it and fails the query on a miss
-    val out = readSchema().fieldNames.toSet
-    attrs.filter(out.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
-  }
+      Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    pruning.filterAttributes(initial, readSchema())
 
   override def filter(predicates: Array[V2Predicate]): Unit = {
-    val kept = files.filter(f => predicates.forall(fileMayMatch(f, _)))
+    val kept = Pruning.select(files, byGroup = false)(pruning.runtime(predicates.toSeq))
     if (kept.size < files.size) { files = kept; delegate = rebuild(kept) }
-    GraftMorScan.lastRuntimePlanned.put(tableName, files.size)
-    ()
-  }
-
-  private def fileMayMatch(f: DataFileMeta, pr: V2Predicate): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-    if (pr.name() != "IN" && pr.name() != "=") return true
-    val children = pr.children()
-    if (children.isEmpty || !children(0).isInstanceOf[NamedReference]) return true
-    val attr = children(0).asInstanceOf[NamedReference].fieldNames.mkString(".")
-    val lits = children.drop(1)
-    if (!lits.forall(_.isInstanceOf[V2Literal[_]])) return true
-    val strs = lits.map(l => StatsLit.str(l.asInstanceOf[V2Literal[_]].value))
-    if (strs.exists(_.isEmpty)) return true // unrenderable literal: keep
-    val values = strs.flatten
-    if (partitionField.contains(attr)) values.exists(_ == f.partition)
-    else schema.fields.find(_.name == attr).map(_.dataType) match {
-      case None => true
-      case Some(dt) =>
-        val sorted = values.sortWith(StatsPruner.compare(dt, _, _) < 0).toArray
-        StatsPruner.mayContainAny(dt, f.stats.get(attr), sorted)
-    }
+    Pruning.lastRuntimePlanned.put(tableName, files.size)
   }
 }

@@ -50,8 +50,10 @@ class GraftTableCatalog extends TableCatalog with FunctionCatalog {
 
   override def name(): String = catalogName
 
+  // the warehouse-containment rule of GraftCatalog: a path-shaped
+  // name is refused before anything is read, created or deleted
   private def rootOf(ident: Identifier): String =
-    Paths.get(warehouse, ident.name).toString
+    GraftCatalog.rootIn(warehouse, ident.name)
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
     graft.util.Fs.listSeq(Paths.get(warehouse))
@@ -79,7 +81,7 @@ class GraftTableCatalog extends TableCatalog with FunctionCatalog {
       case n if n.endsWith("_rt") && !tableExists(ident) => (n.stripSuffix("_rt"), "rt")
       case n => (n, "")
     }
-    val root = Paths.get(warehouse, name).toString
+    val root = GraftCatalog.rootIn(warehouse, name)
     if (!GraftTable.exists(root)) throw new NoSuchTableException(ident)
     val t = GraftTable.load(spark, root)
     val live = t.log.liveFiles(asOf)
@@ -184,17 +186,14 @@ class GraftTableCatalog extends TableCatalog with FunctionCatalog {
     loadTable(ident)
   }
 
+  /** Drops a graft table, or un-registers a registration symlink (a
+    * dangling one included), as [[GraftCatalog.dropTable]] does; false
+    * when neither is there. */
   override def dropTable(ident: Identifier): Boolean = {
-    val root = Paths.get(rootOf(ident))
-    // NOFOLLOW + symlink handling mirror GraftCatalog.dropTable: a
-    // dangling registered-table symlink must stay droppable, and a
-    // live registration must drop the LINK, not the linked files
-    if (!Files.exists(root, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      return false
-    if (Files.isSymbolicLink(root)) { Files.delete(root); return true }
-    if (!GraftTable.exists(root.toString)) return false
-    graft.util.Fs.walkSeq(root).reverse.foreach(Files.deleteIfExists(_))
-    true
+    val root = rootOf(ident)
+    val ours = Files.isSymbolicLink(Paths.get(root)) || GraftTable.exists(root)
+    if (ours) GraftCatalog.deleteRoot(Paths.get(root))
+    ours
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {

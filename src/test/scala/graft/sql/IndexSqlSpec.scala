@@ -94,6 +94,25 @@ class IndexSqlSpec extends AnyFunSuite {
       .as[Long].head() == 10L)
   }
 
+  test("MOR: delta files carry no bloom, the compacted base file carries key and index") {
+    val t = catalog.createTable(TableConfig(name = "idxmor", keyField = "k",
+      orderingField = "ts", numBuckets = 1, tableType = TableConfig.Mor))
+    t.insert(batch(0L))
+    def live(delta: Boolean) = catalog.table("idxmor").log.liveFiles()
+      .filter(_.delta == delta).map(f => s"${t.root}/${f.path}")
+    assert(live(delta = false).nonEmpty)
+    live(delta = false).foreach(f => assert(bloomColumns(f) == Set("k")))
+    gsql.sql("CREATE INDEX v_bloom ON idxmor USING bloom(v)")
+    catalog.table("idxmor").upsert(batch(5L).withColumn("ts", $"ts" + 1))
+    val deltas = live(delta = true)
+    assert(deltas.nonEmpty)
+    deltas.foreach(f => assert(bloomColumns(f).isEmpty, s"$f carries a bloom"))
+    gsql.sql("CALL run_compaction(table => 'idxmor')")
+    assert(live(delta = true).isEmpty)
+    live(delta = false).foreach(f => assert(bloomColumns(f) == Set("k", "v")))
+    assert(catalog.table("idxmor").read().count() == 15L)
+  }
+
   test("SHOW INDEXES / DROP INDEX / validation") {
     val t = catalog.createTable(TableConfig(name = "idxm", keyField = "k",
       orderingField = "ts", numBuckets = 1))

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.Session
-import graft.core.{GraftTable, TableConfig}
+import graft.core.{GraftTable, Pruning, TableConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,14 +46,14 @@ class RuntimeFilterSpec extends AnyFunSuite {
     Seq(("g0", "zero"), ("g1", "one"), ("g2", "two"), ("g3", "three"),
         ("g4", "four")).toDF("g", "label").write.mode("overwrite").parquet(dimPath)
     spark.read.parquet(dimPath).createOrReplaceTempView("rf_dim")
-    GraftMorScan.lastRuntimePlanned.remove("fact_cow")
+    Pruning.lastRuntimePlanned.remove("fact_cow")
     val out = spark.sql(
       s"""SELECT f.k, f.v, d.label FROM $cat.fact_cow f
          |JOIN rf_dim d ON f.g = d.g WHERE d.label = 'one'""".stripMargin)
     val got = out.collect()
     assert(got.length == 100) // 500 rows / 5 partitions
     assert(got.forall(_.getString(2) == "one"))
-    val planned = Option(GraftMorScan.lastRuntimePlanned.get("fact_cow"))
+    val planned = Option(Pruning.lastRuntimePlanned.get("fact_cow"))
     assert(planned.exists(_ < totalFiles),
       s"runtime filter should have pruned files: planned=$planned of $totalFiles " +
         s"(plan:\n${out.queryExecution.executedPlan})")
@@ -71,14 +71,14 @@ class RuntimeFilterSpec extends AnyFunSuite {
     (0L until 500L).map(k => (k, if (k == 7 || k == 13) "hit" else "miss"))
       .toDF("k", "label").write.mode("overwrite").parquet(keysPath)
     spark.read.parquet(keysPath).createOrReplaceTempView("rf_keys")
-    GraftMorScan.lastRuntimePlanned.remove("fact_mor")
+    Pruning.lastRuntimePlanned.remove("fact_mor")
     val out = spark.sql(
       s"""SELECT f.k, f.g, f.ts, d.label FROM $cat.fact_mor f
          |JOIN rf_keys d ON f.k = d.k WHERE d.label = 'hit'""".stripMargin)
     val got = out.collect()
     assert(got.length == 2) // latest-wins: one current row per key
     assert(got.forall(_.getLong(2) % 10 == 1)) // the upsert wave won
-    val planned = Option(GraftMorScan.lastRuntimePlanned.get("fact_mor"))
+    val planned = Option(Pruning.lastRuntimePlanned.get("fact_mor"))
     assert(planned.exists(_ < totalGroups),
       s"runtime filter should have pruned groups: planned=$planned of $totalGroups " +
         s"(plan:\n${out.queryExecution.executedPlan})")

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.Session
-import graft.core.{GraftTable, TableConfig}
+import graft.core.{GraftTable, Pruning, TableConfig}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -260,9 +260,9 @@ class TableCatalogSpec extends AnyFunSuite {
     val total = t.log.liveFiles().groupBy(f => (f.partition, f.bucket)).size
 
     def planned(sql: String): (Long, Int) = {
-      GraftMorScan.lastStaticPlanned.remove("mprune")
+      Pruning.lastStaticPlanned.remove("mprune")
       val n = spark.sql(sql).count()
-      (n, GraftMorScan.lastStaticPlanned.get("mprune"))
+      (n, Pruning.lastStaticPlanned.get("mprune"))
     }
     // partition equality → only that partition's groups
     val (n1, g1) = planned("SELECT k FROM gcat.mprune WHERE p = 'p1'")
@@ -344,5 +344,34 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(listed.contains("ddl_t"))
     spark.sql("DROP TABLE gcat.ddl_t")
     assert(!GraftTable.exists(s"$wh/ddl_t"))
+  }
+
+  test("a path-shaped table name is refused by CREATE, DROP and RENAME") {
+    // the warehouse sits inside `outer`, so an escaping name would land
+    // beside it, where `victim` lives
+    val outer = graft.util.TempDirs.create("graft-dsv2-trav-")
+    val trav = outer.resolve("wh").toString
+    spark.conf.set("spark.sql.catalog.gtrav", "graft.sql.GraftTableCatalog")
+    spark.conf.set("spark.sql.catalog.gtrav.warehouse", trav)
+    val victim = GraftTable.create(spark, outer.resolve("victim").toString,
+      TableConfig(name = "victim", keyField = "id", orderingField = "ts"))
+    victim.insert(Seq((1L, 10L)).toDF("id", "ts"))
+    spark.sql("CREATE TABLE gtrav.src (id BIGINT, ts BIGINT)")
+    def outside: Set[String] = graft.util.Fs.listSeq(outer)
+      .map(_.getFileName.toString).toSet
+    assert(outside == Set("wh", "victim"))
+
+    intercept[Exception](spark.sql("CREATE TABLE gtrav.`../esc` (id BIGINT, ts BIGINT)"))
+    intercept[Exception](spark.sql("DROP TABLE gtrav.`../victim`"))
+    intercept[Exception](spark.sql("ALTER TABLE gtrav.src RENAME TO `../moved`"))
+    intercept[Exception](spark.sql("DROP TABLE gtrav.`..`"))
+
+    assert(outside == Set("wh", "victim"))
+    assert(GraftTable.load(spark, outer.resolve("victim").toString).read().count() == 1L)
+    assert(GraftTable.exists(s"$trav/src"))
+    // a plain name still round-trips
+    spark.sql("ALTER TABLE gtrav.src RENAME TO src2")
+    spark.sql("DROP TABLE gtrav.src2")
+    assert(!GraftTable.exists(s"$trav/src2") && !GraftTable.exists(s"$trav/src"))
   }
 }
