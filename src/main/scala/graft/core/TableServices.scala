@@ -615,7 +615,7 @@ object TableServices {
                 // only hide them. Legacy (pre-epoch) indexes take the
                 // physical path for both.
                 val epochAware =
-                  graft.operators.IvfPq.isEpochAware(t.spark, path)
+                  graft.operators.IvfIndex.open(t.spark, path).epochAware
                 val (tombstoned, removed) =
                   if (epochAware) {
                     val ts = graft.operators.IvfPq.tombstone(
@@ -639,10 +639,8 @@ object TableServices {
                 // retrain exits: the frozen quantizer stopped fitting
                 // (drift), or dead versions outgrew the fold threshold
                 // (every query pays the tombstone anti-join until then)
-                val tombDir = java.nio.file.Paths.get(path, "tombstones")
-                lazy val tombCount =
-                  if (!Files.isDirectory(tombDir)) 0L
-                  else t.spark.read.parquet(tombDir.toString).count()
+                lazy val tombCount = graft.operators.IvfIndex
+                  .open(t.spark, path).rowCount("tombstones")
                 val refroze = stats.driftRatio > driftRetrain ||
                   (epochAware && stats.corpusCount > 0 &&
                     tombCount > foldThreshold * stats.corpusCount)
@@ -716,7 +714,7 @@ object TableServices {
   /** Operational stats of the table's vector index over `vecCol` —
     * the observability row behind `CALL vector_index_stats`. Reads
     * ONLY metadata-scale state (stamp, meta.json, the tombstone
-    * relation's count, journal listing) — no corpus scan. Refuses
+    * relation's footer row counts, journal listing) — no Spark job. Refuses
     * loudly when no index exists (an empty row would read as "index
     * healthy, zero rows"). */
   def vectorIndexStats(t: GraftTable, vecCol: String): VectorIndexStats = {
@@ -731,10 +729,8 @@ object TableServices {
     val meta = graft.operators.IvfIndex.meta(path).getOrElse(
       throw new IllegalStateException(
         s"vector index at $path has a stamp but no meta.json — rebuild"))
-    val tombDir = java.nio.file.Paths.get(path, "tombstones")
-    val tombCount =
-      if (!Files.isDirectory(tombDir)) 0L
-      else t.spark.read.parquet(tombDir.toString).count()
+    val index = graft.operators.IvfIndex.open(t.spark, path)
+    val tombCount = index.rowCount("tombstones")
     val appDir = java.nio.file.Paths.get(path, "_appends")
     val journalDepth =
       if (!Files.isDirectory(appDir)) 0L
@@ -756,6 +752,6 @@ object TableServices {
       lastDriftRatio = last.map(_.driftRatio).getOrElse(-1.0),
       lastAction = last.map(_.action).getOrElse("unknown"),
       lastRefroze = last.exists(_.refroze),
-      epochAware = graft.operators.IvfPq.isEpochAware(t.spark, path))
+      epochAware = index.epochAware)
   }
 }

@@ -299,20 +299,29 @@ case class NearestCentroids(child: Expression,
       case _ =>
         var i = 0; while (i < n) { v(i) = arr.getDouble(i); i += 1 }
     }
-    val dists = centroids.indices.map { c =>
-      val cv = centroids(c)
-      var d = 0.0
-      var i = 0
-      val m = math.min(n, cv.length)
-      while (i < m) { val t = v(i) - cv(i); d += t * t; i += 1 }
-      (d, c)
-    }
-    val top = dists.sortBy { case (d, c) => (d, c) }.take(nProbe).map(_._2)
-    new GenericArrayData(top.toArray)
+    new GenericArrayData(NearestCentroids.nearest(v, centroids, nProbe))
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
+}
+
+object NearestCentroids {
+  /** Indices of the `nProbe` centroids nearest `v`: squared L2 over the
+    * common prefix, ties to the lowest index. The one probe rule of the
+    * IVF index, on executors (the expression) and on the driver. */
+  def nearest(v: Array[Double], centroids: Array[Array[Double]],
+      nProbe: Int): Array[Int] = {
+    val dists = centroids.indices.map { c =>
+      val cv = centroids(c)
+      var d = 0.0
+      var i = 0
+      val m = math.min(v.length, cv.length)
+      while (i < m) { val t = v(i) - cv(i); d += t * t; i += 1 }
+      (d, c)
+    }
+    dists.sortBy { case (d, c) => (d, c) }.take(nProbe).map(_._2).toArray
+  }
 }
 
 /** Squared L2 distance from a vector to its NEAREST centroid — the
@@ -1263,9 +1272,21 @@ case class CosineSim(left: Expression, right: Expression)
   @transient private lazy val leftFloat = elemIsFloat(left)
   @transient private lazy val rightFloat = elemIsFloat(right)
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    CosineSim.of(l.asInstanceOf[ArrayData], leftFloat,
+      r.asInstanceOf[ArrayData], rightFloat)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSim =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSim {
+  /** The cosine of two non-null vectors, each read as float or double
+    * elements; null on a null element or unequal lengths. The loop every
+    * cosine score runs, so scores agree bit for bit wherever computed. */
+  def of(a: ArrayData, aFloat: Boolean, b: ArrayData,
+      bFloat: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var sab = 0.0
@@ -1274,8 +1295,8 @@ case class CosineSim(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (leftFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rightFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
       sab += x * y
       saa += x * x
       sbb += y * y
@@ -1283,10 +1304,6 @@ case class CosineSim(left: Expression, right: Expression)
     }
     sab / (math.sqrt(saa) * math.sqrt(sbb))
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Query-SET ADC score ([[graft.operators.IvfPq.topKBatch]]): the

@@ -109,9 +109,7 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
     val meta = IvfIndex.meta(indexPath).getOrElse(
       throw new IllegalArgumentException(
         s"no frozen quantizer at $indexPath — call freeze() first"))
-    val table = spark.read.parquet(s"$indexPath/centroids.parquet")
-      .orderBy("list").collect()
-      .map(_.getAs[Seq[Double]]("centroid").toArray)
+    val table = IvfIndex.open(spark, indexPath).centroids
     val mean = batch.select(avg(graft.functions.GraftExpressions
         .nearest_centroid_dist(col(vecCol).cast("array<double>"), table)))
       .first().getDouble(0)
@@ -152,8 +150,7 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
     val seen = members.read().select(col("id"), col("vec"), col("_b"))
     val meta = IvfIndex.build(seen, "id", "vec", nClusters, indexPath)
     val centroidsDf = spark.read.parquet(s"$indexPath/centroids.parquet")
-    val table: Array[Array[Double]] = centroidsDf.orderBy("list").collect()
-      .map(_.getAs[Seq[Double]]("centroid").toArray)
+    val table = IvfIndex.open(spark, indexPath).centroids
     val reassigned = seen
       .withColumn("list", element_at(nearest_centroids(col("vec"), table, 1), 1))
       .join(broadcast(centroidsDf), Seq("list"))
@@ -198,8 +195,7 @@ class IncrementalSemanticDedup(spark: SparkSession, root: String,
       s"(${lastPublished(members)}) — batch numbers must be monotone; " +
       "only the LATEST batch may re-run")
     val centroidsDf = spark.read.parquet(s"$indexPath/centroids.parquet")
-    val table: Array[Array[Double]] = centroidsDf.orderBy("list").collect()
-      .map(_.getAs[Seq[Double]]("centroid").toArray)
+    val table = IvfIndex.open(spark, indexPath).centroids
     val assigned = batch
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
       .withColumn("list", element_at(nearest_centroids(col("vec"), table, 1), 1))

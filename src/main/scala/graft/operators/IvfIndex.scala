@@ -1,11 +1,20 @@
 package graft.operators
 
+import graft.functions.{CosineSim, NearestCentroids}
 import graft.functions.GraftExpressions.nearest_centroids
-import graft.functions.VectorFunctions.cosine
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types._
+import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Persisted IVF (inverted-file) ANN index — the Faiss-style coarse
   * quantizer as a TABLE SERVICE rather than a per-query computation
@@ -201,11 +210,152 @@ object IvfIndex {
     }
   }
 
-  /** Top-k via the persisted index: centroids load once (nLists × dim
-    * doubles), each query probes its `nProbe` nearest lists, and the
-    * assignments scan is partition-pruned to exactly the probed lists —
-    * no corpus-wide shuffle, no training work at query time. */
-  /** `excludeSelf` drops the row whose id equals the query's id — the
+  /** An index's small state, read on the driver with no Spark job:
+    * meta.json, the centroid table, the PQ codebooks and the stored
+    * relations' schemas, each schema from one parquet footer. Open one
+    * per call: a write to the index leaves an open handle stale. */
+  final class Handle private[IvfIndex] (spark: SparkSession, val path: String) {
+    val meta: Option[Meta] = IvfIndex.meta(path)
+
+    /** List `l`'s centroid at index `l` (a build numbers lists from 0). */
+    lazy val centroids: Array[Array[Double]] =
+      smallTable("centroids.parquet")
+        .map(g => g.getInteger("list", 0) -> doubles(g, "centroid"))
+        .sortBy(_._1).map(_._2).toArray
+
+    lazy val codebooks: Pq.Codebooks = {
+      val books = smallTable("pq_codebooks.parquet")
+        .map(g => (g.getInteger("sub", 0), g.getInteger("code", 0),
+          doubles(g, "centroid")))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
+      Pq.Codebooks(books.length, books(0)(0).length, books)
+    }
+
+    private lazy val schemas: Map[String, Option[StructType]] =
+      Seq("assignments", "pq_codes", "tombstones")
+        .map(r => r -> footerSchema(r)).toMap
+
+    /** The schema of stored relation `rel` (`assignments`, `pq_codes`
+      * or `tombstones`); None while it holds no file. */
+    def schema(rel: String): Option[StructType] = schemas(rel)
+
+    /** Stored relation `rel`, read with its footer schema. */
+    def read(rel: String): DataFrame = spark.read.schema(schema(rel).getOrElse(
+        throw new IllegalArgumentException(s"index at $path has no $rel")))
+      .parquet(s"$path/$rel")
+
+    /** Build-time meta columns stored beside the vectors: every
+      * assignments column but the index's own (id, vec, list, epoch).
+      * A bare quantizer with no assignments yet has none. */
+    def storedMetaCols: Seq[String] = schema("assignments").fold(Seq.empty[String])(
+      _.fieldNames.toSeq.filterNot(Set("id", "vec", "list", "epoch").contains))
+
+    /** Whether the stored relations carry the `epoch` version-order
+      * column (indexes built before it take the physical-remove path
+      * instead of tombstones). A bare quantizer is epoch-aware: its
+      * first append defines the schema. */
+    def epochAware: Boolean =
+      schema("assignments").forall(_.fieldNames.contains("epoch"))
+
+    /** The `nProbe` lists nearest `v`, by [[NearestCentroids]]' rule. */
+    def probe(v: Array[Double], nProbe: Int): Array[Int] =
+      NearestCentroids.nearest(v, centroids, nProbe)
+
+    /** Drop stored rows superseded by a LATER tombstone for their id
+      * ([[IvfPq.tombstone]]) — every query path applies it to both
+      * persisted relations. No-op when there are no tombstones or the
+      * index predates epochs. The anti-join condition is `tomb.epoch >
+      * row.epoch`: a row re-appended after its tombstone carries a later
+      * epoch and survives. */
+    def withoutTombstoned(rel: DataFrame): DataFrame =
+      if (schema("tombstones").isEmpty || !rel.columns.contains("epoch")) rel
+      else {
+        val t = read("tombstones")
+          .select(col("id").as("__tid"), col("epoch").as("__tepoch"))
+        rel.join(t, rel("id") === col("__tid") &&
+          col("__tepoch") > rel("epoch"), "left_anti")
+      }
+
+    /** Rows of stored relation `rel`, or of its list `list`, summed from
+      * parquet footers. */
+    def rowCount(rel: String, list: Option[Int] = None): Long =
+      dataFiles(rel, list).map(f => withFooter(f)(_.getRecordCount)).sum
+
+    private def conf = spark.sessionState.newHadoopConf()
+
+    /** Parquet data files of `rel`, or of its list `list`, skipping
+      * `_`/`.`-prefixed entries as Spark's file listing does. Listed
+      * live, never cached. */
+    def dataFiles(rel: String, list: Option[Int] = None): Seq[Path] = {
+      val dir = list.fold(Paths.get(path, rel))(l => Paths.get(path, rel, s"list=$l"))
+      if (!Files.isDirectory(dir)) Nil
+      else graft.util.Fs.walk(dir)(_.filter { p =>
+        Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet") &&
+          dir.relativize(p).iterator().asScala.forall { c =>
+            val n = c.toString; !n.startsWith("_") && !n.startsWith(".")
+          }
+      }.toSeq)
+    }
+
+    private def withFooter[A](f: Path)(body: ParquetFileReader => A): A = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try body(r) finally r.close()
+    }
+
+    /** Spark's schema from the footer metadata of one data file; the two
+      * list-partitioned relations end in their `list` column. */
+    private def footerSchema(rel: String): Option[StructType] =
+      dataFiles(rel).headOption.map { f =>
+        withFooter(f)(r => Option(r.getFooter.getFileMetaData
+            .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+          .map { json =>
+            val data = DataType.fromJson(json).asInstanceOf[StructType]
+            if (rel == "tombstones") data else data.add("list", IntegerType)
+          }
+          .getOrElse(spark.read.parquet(s"$path/$rel").schema)
+      }
+
+    /** Every row of an unpartitioned metadata-scale relation. */
+    private def smallTable(rel: String): Seq[Group] = dataFiles(rel).flatMap { f =>
+      val r = ParquetReader.builder(new GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(f.toUri)).withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).toList
+      finally r.close()
+    }
+
+    private def doubles(g: Group, field: String): Array[Double] = {
+      val list = g.getGroup(field, 0)
+      Array.tabulate(list.getFieldRepetitionCount(0))(
+        i => list.getGroup(0, i).getDouble(0, 0))
+    }
+  }
+
+  def open(spark: SparkSession, path: String): Handle = new Handle(spark, path)
+
+  /** Exact top-k by cosine over the probed lists, in one scan.
+    *
+    *  1. The query rows' (id, vec) are collected on the driver, at most
+    *     [[IvfPq.MaxQueriesPerPass]] ids per pass; a larger query set is
+    *     sorted by id and served in passes of that many.
+    *  2. Each query picks its `nProbe` lists on the driver
+    *     ([[Handle.probe]]).
+    *  3. One scan reads the probed `assignments` partitions, with the
+    *     stored-column predicate, the tombstones and the allowed id set
+    *     (a semi join) applied before ranking, so no rank slot is spent
+    *     on a filtered row. Each task keeps a bounded list of k distinct
+    *     neighbours per query, ordered by cosine desc (null last) then
+    *     neighbor_id asc, the order of a `row_number` window.
+    *  4. The task lists merge on the driver as tasks finish (`RDD.fold`),
+    *     so the driver holds O(queries·k) rows, never one per partition.
+    *
+    * Cosines come from [[CosineSim]]'s loop, bit-equal to `cosine_sim`.
+    * Query rows sharing an id rank as one query. The result is a local
+    * relation of (query_id, neighbor_id, rank int, cosine); an empty
+    * query set gives an empty one.
+    *
+    * `excludeSelf` drops the row whose id equals the query's id — the
     * contract when queries ARE corpus rows. Pass false for EXTERNAL
     * query vectors carrying a sentinel id: self-exclusion there would
     * silently drop a legitimate corpus row that happens to share the
@@ -213,39 +363,136 @@ object IvfIndex {
   def topK(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int,
       allowed: Option[DataFrame] = None,
-      storedFilter: Option[org.apache.spark.sql.Column] = None,
+      storedFilter: Option[Column] = None,
       excludeSelf: Boolean = true): DataFrame = {
-    val table = spark.read.parquet(s"$path/centroids.parquet")
-      .orderBy("list").collect()
-      .map(_.getAs[Seq[Double]]("centroid").toArray)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-      .withColumn("list", explode(nearest_centroids(col("qvec"), table, nProbe)))
-    // queries are the small side by contract; their probed-list union
-    // drives partition pruning of the assignments scan
-    val probed = q.select("list").distinct().collect().map(_.getInt(0))
-    // metadata filter (the filtered-retrieval contract, IvfPq's shared
-    // helper): the surviving id set semi-joins BEFORE ranking, so every
-    // returned neighbor satisfies the predicate and no rank slot is
-    // wasted
-    // stored-column predicate (the build-time metaCols path): applied
-    // straight to the pruned assignments scan, where it pushes into
-    // the parquet read at any selectivity
-    val base = storedFilter.foldLeft(
-      spark.read.parquet(s"$path/assignments")
-        .filter(col("list").isin(probed.toIndexedSeq: _*)))(_.filter(_))
-    val filtered = IvfPq.applyAllowed(
-      IvfPq.applyTombstones(base, path), allowed)
-    val c = filtered
-      .select(col("id").as("neighbor_id"), col("vec").as("cvec"), col("list"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val joined = c.join(broadcast(q), Seq("list"))
-    (if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-     else joined)
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    val h = open(spark, path)
+    val asg = h.read("assignments")
+    val idType = asg.schema("id").dataType
+    val qproj = queries.select(col(idCol).as("query_id"),
+      col(idCol).cast(idType).as("query_key"), col(vecCol).as("qvec"))
+    val schema = new StructType()
+      .add("query_id", qproj.schema("query_id").dataType)
+      .add("neighbor_id", idType)
+      .add("rank", IntegerType, nullable = false)
+      .add("cosine", DoubleType)
+    val max = IvfPq.MaxQueriesPerPass
+    // one job: each task returns at most max + 1 rows, and the driver
+    // keeps at most max + 1 (a limit would run a job per scale-up round)
+    val first = ArrayBuffer.empty[Row]
+    if (k > 0) spark.sparkContext.runJob(qproj.rdd,
+      (rows: Iterator[Row]) => rows.take(max + 1).toArray,
+      (_: Int, rows: Array[Row]) => first ++= rows.take(max + 1 - first.length))
+    val passes =
+      if (first.length <= max) Iterator(first.toArray)
+      else {
+        // past one pass: id-sorted, so rows sharing an id share a pass
+        val it = qproj.orderBy("query_id").toLocalIterator().asScala.buffered
+        Iterator.continually {
+          val b = ArrayBuffer.empty[Row]
+          while (it.hasNext && (b.length < max || it.head.get(0) == b.last.get(0)))
+            b += it.next()
+          b.toArray
+        }.takeWhile(_.nonEmpty)
+      }
+    val scan = (lists: Seq[Int]) => IvfPq.applyAllowed(h.withoutTombstoned(
+        storedFilter.foldLeft(asg.filter(col("list").isin(lists: _*)))(_.filter(_))),
+      allowed).select("id", "vec", "list")
+    val floats = (t: DataType) => t.asInstanceOf[ArrayType].elementType == FloatType
+    val rows = passes.flatMap(qs => rankPass(spark, h, qs, scan, idType,
+      floats(qproj.schema("qvec").dataType), floats(asg.schema("vec").dataType),
+      k, nProbe, excludeSelf)).toList
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** One pass of [[topK]] over collected (query_id, query_key, qvec)
+    * rows. */
+  private def rankPass(spark: SparkSession, h: Handle, qs: Array[Row],
+      scanOf: Seq[Int] => DataFrame, idType: DataType, qFloat: Boolean,
+      vFloat: Boolean, k: Int, nProbe: Int, excludeSelf: Boolean): Seq[Row] = {
+    val slots = qs.map(_.get(0)).distinct
+    val slotOf = slots.zipWithIndex.toMap
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    // a null vector probes nothing; a null element reads 0.0 when
+    // probing (as in nearest_centroids) and nulls every cosine
+    val live = qs.filterNot(_.isNullAt(2))
+    val qv: Array[(Int, Any, ArrayData)] = live.map(r => (slotOf(r.get(0)),
+      toKey(r.get(1)), new GenericArrayData(r.getSeq[Any](2).toArray)))
+    val byList: Map[Int, Array[Int]] = live.zipWithIndex.flatMap { case (r, i) =>
+      h.probe(r.getSeq[Any](2).map {
+        case null => 0.0
+        case x: Float => x.toDouble
+        case x => x.asInstanceOf[Double]
+      }.toArray, nProbe).map(_ -> i)
+    }.groupBy(_._1).map { case (l, ps) => l -> ps.map(_._2) }
+    if (byList.isEmpty) return Nil
+    val scan = scanOf(byList.keys.toSeq.sorted)
+    val bc = spark.sparkContext.broadcast((qv, byList))
+    val zero = Array.fill(slots.length)(new TopK(k, idType))
+    val merged = try SQLExecution.withNewExecutionId(scan.queryExecution,
+        Some("vector_search")) {
+      scan.queryExecution.toRdd.mapPartitions { rows =>
+        val (qv, byList) = bc.value
+        val heaps = Array.fill(zero.length)(new TopK(k, idType))
+        rows.foreach { r =>
+          byList.get(r.getInt(2)).foreach { qis =>
+            val id = if (r.isNullAt(0)) null else r.get(0, idType)
+            val vec = if (r.isNullAt(1)) null else r.getArray(1)
+            qis.foreach { i =>
+              val (slot, key, q) = qv(i)
+              if (!excludeSelf || (key != null && id != null && key != id))
+                heaps(slot).offer(id,
+                  if (vec == null) null else CosineSim.of(q, qFloat, vec, vFloat))
+            }
+          }
+        }
+        Iterator.single(heaps)
+      }.fold(zero) { (a, b) => a.indices.foreach(i => a(i).merge(b(i))); a }
+    } finally bc.destroy()
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    merged.toSeq.zip(slots).flatMap { case (top, qid) =>
+      top.ranked.zipWithIndex.map { case ((nid, cos), r) =>
+        Row(qid, toId(nid), r + 1, cos) }
+    }
+  }
+
+  /** A query's best `k` distinct neighbours in rank order: cosine desc
+    * (NaN first and null last, as Spark sorts), then neighbour id asc
+    * (null first). A neighbour offered twice keeps its better entry, so
+    * merging two lists gives the top k of their union. */
+  private final class TopK(k: Int, idType: DataType) extends Serializable {
+    @transient private lazy val idOrder = TypeUtils.getInterpretedOrdering(idType)
+    private val hits = ArrayBuffer.empty[(Any, java.lang.Double)]
+
+    private def cmp(a: (Any, java.lang.Double), b: (Any, java.lang.Double)): Int = {
+      val byCos = (a._2, b._2) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x, y) => SQLOrderingUtil.compareDoubles(y, x)
+      }
+      if (byCos != 0) byCos
+      else (a._1, b._1) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (x, y) => idOrder.compare(x, y)
+      }
+    }
+
+    def offer(id: Any, cos: java.lang.Double): Unit = {
+      val h = (id, cos)
+      if (hits.length == k && cmp(h, hits.last) >= 0) return
+      val at = hits.indexWhere(_._1 == id)
+      if (at >= 0) {
+        if (cmp(h, hits(at)) >= 0) return
+        hits.remove(at)
+      } else if (hits.length == k) hits.remove(k - 1)
+      val pos = hits.indexWhere(cmp(h, _) < 0)
+      hits.insert(if (pos < 0) hits.length else pos, (InternalRow.copyValue(id), cos))
+    }
+
+    def merge(o: TopK): Unit = o.hits.foreach { case (id, cos) => offer(id, cos) }
+
+    def ranked: Seq[(Any, java.lang.Double)] = hits.toSeq
   }
 }

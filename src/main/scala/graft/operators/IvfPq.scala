@@ -25,6 +25,10 @@ import org.apache.spark.sql.functions._
   * directories (inputFiles-asserted). */
 object IvfPq {
 
+  /** Query rows one search pass collects to the driver — the bound of
+    * [[topKBatch]]'s default pass and of [[IvfIndex.topK]]'s passes. */
+  val MaxQueriesPerPass = 4096
+
   /** Build coarse index + codebooks + encoded codes. `metaCols`
     * persist beside the vectors AND the codes ([[IvfIndex.build]]'s
     * stored-filter-column path): a retrieval predicate over them
@@ -46,23 +50,14 @@ object IvfPq {
     }.toSeq.toDF("sub", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks.parquet")
     // encode the assignments relation and lay codes out by list
-    val asg = spark.read.parquet(s"$path/assignments")
-    Pq.encode(asg, "id", "vec", cb)
+    Pq.encode(IvfIndex.open(spark, path).read("assignments"), "id", "vec", cb)
       .write.mode("overwrite").partitionBy("list").parquet(s"$path/pq_codes")
     cb
   }
 
-  /** Reload persisted codebooks. */
-  def codebooks(spark: SparkSession, path: String): Pq.Codebooks = {
-    val rows = spark.read.parquet(s"$path/pq_codebooks.parquet")
-      .orderBy("sub", "code").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val books = Array.tabulate(m) { sub =>
-      rows.filter(_.getInt(0) == sub).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray)
-    }
-    Pq.Codebooks(m, books(0)(0).length, books)
-  }
+  /** Reload persisted codebooks (a driver read, no Spark job). */
+  def codebooks(spark: SparkSession, path: String): Pq.Codebooks =
+    IvfIndex.open(spark, path).codebooks
 
   /** Result of one incremental [[append]]: how much landed, the new
     * corpus size, and the drift statistic. `driftRatio` is the batch's
@@ -103,8 +98,8 @@ object IvfPq {
   def append(batch: DataFrame, idCol: String, vecCol: String,
       path: String, batchId: Option[String] = None,
       epoch: Option[String] = None): AppendStats = {
-    val spark = batch.sparkSession
-    val meta = IvfIndex.meta(path).getOrElse(throw new IllegalArgumentException(
+    val h = IvfIndex.open(batch.sparkSession, path)
+    val meta = h.meta.getOrElse(throw new IllegalArgumentException(
       s"no IVF-PQ index at $path — build() first"))
     require(meta.idCol == idCol && meta.vecCol == vecCol,
       s"index at $path was built over (${meta.idCol}, ${meta.vecCol}), " +
@@ -122,12 +117,12 @@ object IvfPq {
       s"${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}")
     if (Files.exists(appDir.resolve(s"$id.done")))
       return AppendStats(0L, meta.corpusCount, 0.0, meta.meanAssignDist, -1.0)
-    // ONE lean pass answers both emptiness and the dim probe FIRST —
-    // idle streaming micro-batches hit append every epoch and must pay
-    // neither the assignments footer read (storedMetaCols) nor the
-    // codebook/centroid loads
+    // ONE lean pass answers emptiness, the dim probe and the drift
+    // statistic (the batch's mean assigned-centroid distance) FIRST
+    val table = h.centroids
     val probe = batch.select(col(vecCol).as("vec"))
-      .agg(count(lit(1)), first(size(col("vec")))).first()
+      .agg(count(lit(1)), first(size(col("vec"))), avg(graft.functions
+        .GraftExpressions.nearest_centroid_dist(col("vec"), table))).first()
     val n = probe.getLong(0)
     if (n == 0L)
       return AppendStats(0L, meta.corpusCount, 0.0, meta.meanAssignDist, -1.0)
@@ -140,7 +135,7 @@ object IvfPq {
     // (id, vec, list) is a build-time meta column the batch MUST carry
     // too, or appended rows would silently escape every stored-column
     // filter (their meta would read back null)
-    val metaCols = storedMetaCols(spark, path)
+    val metaCols = h.storedMetaCols
     metaCols.foreach { c => require(batch.columns.contains(c),
       s"index at $path stores filter column '$c' beside the vectors — " +
       "the append batch must carry it too") }
@@ -148,16 +143,12 @@ object IvfPq {
     // only when the stored relations carry the column (legacy indexes
     // keep their schema and the physical-remove maintenance path)
     val epochCols =
-      if (isEpochAware(spark, path))
-        Seq(lit(epoch.getOrElse("")).as("epoch"))
+      if (h.epochAware) Seq(lit(epoch.getOrElse("")).as("epoch"))
       else Nil
     val b = batch.select((col(idCol).as("id") +: col(vecCol).as("vec") +:
       (epochCols ++ metaCols.map(col))): _*).persist()
     try {
-      val cb = codebooks(spark, path)
-      val table = spark.read.parquet(s"$path/centroids.parquet")
-        .orderBy("list").collect()
-        .map(_.getAs[Seq[Double]]("centroid").toArray)
+      val cb = h.codebooks
       val marker = appDir.resolve(s"$id.inprogress")
       Files.writeString(marker, "")
       val asg = b.withColumn("list",
@@ -166,8 +157,7 @@ object IvfPq {
       asg.write.mode("append").partitionBy("list").parquet(s"$path/assignments")
       Pq.encode(asg, "id", "vec", cb)
         .write.mode("append").partitionBy("list").parquet(s"$path/pq_codes")
-      val batchMean = b.select(avg(graft.functions.GraftExpressions
-        .nearest_centroid_dist(col("vec"), table))).first().getDouble(0)
+      val batchMean = probe.getDouble(2)
       val newMeta = meta.copy(corpusCount = meta.corpusCount + n)
       Files.write(Paths.get(path, "meta.json"),
         graft.core.CommitLog.mapper.writeValueAsBytes(newMeta))
@@ -214,19 +204,19 @@ object IvfPq {
         s"(${leftover.map(_.getFileName).mkString(", ")}) — rebuild() " +
         "before refreezing")
     }
-    val cbOld = codebooks(spark, path)
+    val h = IvfIndex.open(spark, path)
+    val cbOld = h.codebooks
     // rebuild under the ORIGINAL column names so the refrozen meta still
     // matches every later append(idCol, vecCol) call
     val (idCol, vecCol) =
       (if (meta.idCol.nonEmpty) meta.idCol else "id",
         if (meta.vecCol.nonEmpty) meta.vecCol else "vec")
-    val metaCols = storedMetaCols(spark, path)
+    val metaCols = h.storedMetaCols
     // tombstone FOLD: superseded versions drop out of the retrain
     // corpus here, epochs reset to the build-time empty epoch, and the
     // tombstone relation does NOT carry into the swapped index — this
     // is the compaction exit the tombstone path points at
-    val corpus = applyTombstones(
-        spark.read.parquet(s"$path/assignments"), path)
+    val corpus = h.withoutTombstoned(h.read("assignments"))
       .select((col("id").as(idCol) +: col("vec").as(vecCol) +:
         metaCols.map(col)): _*)
     val tmp = Paths.get(s"$path.refreeze-tmp")
@@ -274,8 +264,8 @@ object IvfPq {
     * (removing absent ids is a no-op), so retries need no batch key.
     * Returns the number of vectors removed. */
   def remove(victims: DataFrame, idCol: String, path: String): Long = {
-    val spark = victims.sparkSession
-    val meta = IvfIndex.meta(path).getOrElse(
+    val h = IvfIndex.open(victims.sparkSession, path)
+    val meta = h.meta.getOrElse(
       throw new IllegalArgumentException(
         s"no IVF-PQ index at $path — build() first"))
     import java.nio.file.{Files, Paths}
@@ -288,7 +278,7 @@ object IvfPq {
       s"(${leftover.map(_.getFileName).mkString(", ")}) — rebuild() first")
     val ids = victims.select(col(idCol).as("id")).distinct().persist()
     try {
-      val asg = spark.read.parquet(s"$path/assignments")
+      val asg = h.read("assignments")
       // affected lists: pruned metadata-scale collect (≤ nLists values)
       val lists = asg.join(ids, Seq("id")).select("list").distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
@@ -296,26 +286,24 @@ object IvfPq {
       val marker = appDir.resolve(
         s"remove-${java.util.UUID.randomUUID()}.inprogress")
       Files.writeString(marker, "")
-      var removed = 0L
+      def rows() = lists.map(l => h.rowCount("assignments", Some(l))).sum
+      val rowsBefore = rows()
       Seq("assignments", "pq_codes").foreach { rel =>
-        val pruned = spark.read.parquet(s"$path/$rel")
-          .filter(col("list").isin(lists: _*))
-        val kept = pruned.join(ids, Seq("id"), "left_anti")
+        val filesBefore = lists.map(l => h.dataFiles(rel, Some(l)))
+        h.read(rel).filter(col("list").isin(lists: _*))
+          .join(ids, Seq("id"), "left_anti")
           .localCheckpoint() // sever the self-read before the overwrite
-        if (rel == "assignments")
-          removed = pruned.count() - kept.count()
-        kept.write.mode("overwrite")
+          .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("list").parquet(s"$path/$rel")
-        // a fully-emptied list writes nothing under dynamic overwrite —
-        // its stale directory would resurrect the removed rows
-        val survivors = kept.select("list").distinct()
-          .collect().map(_.getInt(0)).toSet
-        lists.filterNot(survivors.contains).foreach { l =>
-          graft.util.TempDirs.deleteRecursively(
-            Paths.get(path, rel, s"list=$l"))
+        // a fully-emptied list writes nothing under dynamic overwrite, so
+        // its files are the old ones — they would resurrect the removed rows
+        lists.zip(filesBefore).foreach { case (l, before) =>
+          if (h.dataFiles(rel, Some(l)) == before)
+            graft.util.TempDirs.deleteRecursively(Paths.get(path, rel, s"list=$l"))
         }
       }
+      val removed = rowsBefore - rows()
       Files.write(Paths.get(path, "meta.json"),
         graft.core.CommitLog.mapper.writeValueAsBytes(
           meta.copy(corpusCount = meta.corpusCount - removed)))
@@ -355,36 +343,6 @@ object IvfPq {
       }
       .start()
 
-  /** Single-query top-k: probe the `nProbe` coarse lists nearest the
-    * query (driver-side over the nLists×dim centroid table), scan
-    * ONLY those code partitions, ADC-score, TakeOrdered. */
-  /** Build-time meta columns stored beside the vectors: everything in
-    * the persisted assignments schema that is not the index's own
-    * (id, vec, list) — the relations are self-describing, so appends
-    * and refreezes need no meta.json field. */
-  private def storedMetaCols(spark: SparkSession, path: String): Seq[String] = {
-    // a cloned bare quantizer (meta + centroids + codebooks only) has
-    // no assignments yet — its first append creates them, meta-free.
-    // `epoch` is the index's own version-ordering column, never a
-    // caller-supplied meta column.
-    val asg = java.nio.file.Paths.get(path, "assignments")
-    if (!java.nio.file.Files.isDirectory(asg)) Nil
-    else spark.read.parquet(asg.toString).schema.fieldNames.toSeq
-      .filterNot(Set("id", "vec", "list", "epoch").contains)
-  }
-
-  /** Whether the persisted relations carry the `epoch` version-order
-    * column (indexes built before it existed do not — they take the
-    * physical-remove maintenance path instead of tombstones). A bare
-    * quantizer with no assignments yet is epoch-aware: its first
-    * append defines the schema and attaches the column. */
-  private[graft] def isEpochAware(spark: SparkSession,
-      path: String): Boolean = {
-    val asg = java.nio.file.Paths.get(path, "assignments")
-    !java.nio.file.Files.isDirectory(asg) ||
-      spark.read.parquet(asg.toString).schema.fieldNames.contains("epoch")
-  }
-
   /** UPDATE-victim tombstones — the cheap half of incremental index
     * maintenance. A scattered update batch touches most list
     * partitions, so physically rewriting them ([[remove]]) costs
@@ -410,38 +368,19 @@ object IvfPq {
     * written. */
   def tombstone(victims: DataFrame, idCol: String, path: String,
       epoch: String): Long = {
-    val spark = victims.sparkSession
-    require(IvfIndex.meta(path).isDefined,
-      s"no IVF-PQ index at $path — build() first")
-    require(isEpochAware(spark, path),
+    val h = IvfIndex.open(victims.sparkSession, path)
+    require(h.meta.isDefined, s"no IVF-PQ index at $path — build() first")
+    require(h.epochAware,
       s"index at $path predates the epoch column — tombstones cannot " +
       "order against its rows; use remove() or rebuild")
     require(epoch.nonEmpty, "tombstone epoch must be a commit instant")
     val t = victims.select(col(idCol).as("id")).distinct()
       .withColumn("epoch", org.apache.spark.sql.functions.lit(epoch))
     if (t.isEmpty) return 0L
+    val before = h.rowCount("tombstones")
     t.write.mode("append").parquet(
       java.nio.file.Paths.get(path, "tombstones").toString)
-    t.count()
-  }
-
-  /** Drop stored rows superseded by a LATER tombstone for their id —
-    * applied by every query path to both persisted relations. No-op
-    * (zero cost) when the tombstone relation is absent or the index
-    * predates epochs. The anti-join condition is `tomb.epoch >
-    * row.epoch`: a row re-appended after its tombstone carries a later
-    * epoch and survives. */
-  private[operators] def applyTombstones(rel: DataFrame,
-      path: String): DataFrame = {
-    val dir = java.nio.file.Paths.get(path, "tombstones")
-    if (!java.nio.file.Files.isDirectory(dir) ||
-        !rel.columns.contains("epoch")) rel
-    else {
-      val t = rel.sparkSession.read.parquet(dir.toString)
-        .select(col("id").as("__tid"), col("epoch").as("__tepoch"))
-      rel.join(t, rel("id") === col("__tid") &&
-        col("__tepoch") > rel("epoch"), "left_anti")
-    }
+    h.rowCount("tombstones") - before
   }
 
   /** Stored-column predicate applied straight to the pruned codes
@@ -483,22 +422,18 @@ object IvfPq {
       rel.join(a.select(col(a.columns.head).as("id")), Seq("id"), "left_semi")
     }
 
+  /** Single-query top-k: probe the `nProbe` coarse lists nearest the
+    * query (driver-side over the nLists×dim centroid table), scan
+    * ONLY those code partitions, ADC-score, TakeOrdered. */
   def topK(spark: SparkSession, path: String, cb: Pq.Codebooks,
       queryVec: Array[Double], k: Int, nProbe: Int,
       allowed: Option[DataFrame] = None,
       storedFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(nProbe > 0, s"nProbe=$nProbe")
-    val cents = spark.read.parquet(s"$path/centroids.parquet")
-      .orderBy("list").collect()
-      .map(r => r.getInt(0) -> r.getAs[Seq[Double]]("centroid").toArray)
-    val probed = cents.map { case (list, c) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = queryVec(j) - c(j); d += t * t; j += 1 }
-      (list, d)
-    }.sortBy { case (list, d) => (d, list) }.take(nProbe).map(_._1)
-    val codes = applyAllowed(applyStored(applyTombstones(
-      spark.read.parquet(s"$path/pq_codes")
-        .filter(col("list").isin(probed.toIndexedSeq: _*)), path),
+    val h = IvfIndex.open(spark, path)
+    val probed = h.probe(queryVec, nProbe)
+    val codes = applyAllowed(applyStored(h.withoutTombstoned(
+      h.read("pq_codes").filter(col("list").isin(probed.toIndexedSeq: _*))),
       storedFilter), allowed)
     Pq.adcTopK(codes, "id", cb, queryVec, k)
   }
@@ -574,7 +509,7 @@ object IvfPq {
     * trade — filtering never widens the probe). */
   def topKBatch(queries: DataFrame, qidCol: String, qvecCol: String,
       path: String, cb: Pq.Codebooks, k: Int, nProbe: Int,
-      candidates: Int, maxQueries: Int = 4096,
+      candidates: Int, maxQueries: Int = MaxQueriesPerPass,
       allowed: Option[DataFrame] = None, maxPasses: Int = 256,
       storedFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(nProbe > 0, s"nProbe=$nProbe")
@@ -610,10 +545,7 @@ object IvfPq {
     require(qidProbe.length.toLong <= capL, capMsg)
     require(qidProbe.nonEmpty, "topKBatch: empty query table")
     // the O(nLists) centroid table loads ONCE, shared by every pass
-    val cents = spark.read
-      .parquet(s"$path/centroids.parquet")
-      .orderBy("list").collect()
-      .map(r => r.getInt(0) -> r.getAs[Seq[Double]]("centroid").toArray)
+    val h = IvfIndex.open(spark, path)
     if (qidProbe.length <= maxQueries) {
       // single pass: one bounded (qid, qvec) collect; the guards
       // re-check the collected snapshot itself, so a source that grew
@@ -626,7 +558,7 @@ object IvfPq {
       require(qsAll.nonEmpty, "topKBatch: empty query table")
       require(qsAll.map(_._1).distinct.length == qsAll.length, dupMsg)
       dimCheck(qsAll)
-      topKBatchPass(spark, qsAll, path, cb, cents, k, nProbe,
+      topKBatchPass(spark, qsAll, h, cb, k, nProbe,
         candidates, allowed, storedFilter)
     } else {
       // engine-side chunking: per-query results are independent, so
@@ -648,7 +580,7 @@ object IvfPq {
           .collect()
           .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
         dimCheck(chunk)
-        topKBatchPass(spark, chunk, path, cb, cents, k, nProbe,
+        topKBatchPass(spark, chunk, h, cb, k, nProbe,
           candidates, allowed, storedFilter)
       }.reduce(_.unionByName(_))
     }
@@ -657,20 +589,15 @@ object IvfPq {
   /** One ≤-maxQueries pass — the single-broadcast plan described on
     * [[topKBatch]], over an already-collected query snapshot. */
   private def topKBatchPass(spark: SparkSession,
-      qs: Array[(Long, Array[Double])], path: String, cb: Pq.Codebooks,
-      cents: Array[(Int, Array[Double])], k: Int,
+      qs: Array[(Long, Array[Double])], h: IvfIndex.Handle, cb: Pq.Codebooks,
+      k: Int,
       nProbe: Int, candidates: Int, allowed: Option[DataFrame],
       storedFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
     // per-query probed lists: Q × nLists × dim flops on the driver —
     // metadata-scale, same table the single-query path loads anyway
     val pairs: Array[(Long, Int)] = qs.flatMap { case (qid, v) =>
-      cents.map { case (list, c) =>
-        var d = 0.0; var j = 0
-        while (j < c.length) { val t = v(j) - c(j); d += t * t; j += 1 }
-        (list, d)
-      }.sortBy { case (list, d) => (d, list) }.take(nProbe)
-        .map { case (list, _) => (qid, list) }
+      h.probe(v, nProbe).map(list => (qid, list))
     }
     val unionLists = pairs.map(_._2).distinct.toIndexedSeq
     val bcQ = spark.sparkContext.broadcast(qs.toMap)
@@ -679,9 +606,8 @@ object IvfPq {
     // spent on filtered-out rows: stored-column predicate pushes into
     // the parquet scan; the id-set semi-join covers columns the build
     // did not store
-    val filteredCodes = applyAllowed(applyStored(applyTombstones(
-      spark.read.parquet(s"$path/pq_codes")
-        .filter(col("list").isin(unionLists: _*)), path),
+    val filteredCodes = applyAllowed(applyStored(h.withoutTombstoned(
+      h.read("pq_codes").filter(col("list").isin(unionLists: _*))),
       storedFilter), allowed)
     val scored = filteredCodes
       .join(broadcast(pairsDf), Seq("list"))
@@ -697,8 +623,8 @@ object IvfPq {
     // the assignments side must tombstone-filter too: a candidate id
     // alive on the codes side may still have superseded VERSIONS here,
     // and the id join would pull their stale vectors into the re-rank
-    val exact = applyTombstones(spark.read.parquet(s"$path/assignments")
-        .filter(col("list").isin(unionLists: _*)), path)
+    val exact = h.withoutTombstoned(h.read("assignments")
+        .filter(col("list").isin(unionLists: _*)))
       .join(broadcast(cand), Seq("id"))
       .select(col("qid").as("query_id"), col("id").as("neighbor_id"),
         graft.functions.GraftExpressions.dot_product_set(
@@ -726,7 +652,7 @@ object IvfPq {
   def topKBatchStream(queries: DataFrame, qidCol: String, qvecCol: String,
       path: String, cb: Pq.Codebooks, k: Int, nProbe: Int,
       candidates: Int, checkpointDir: String, outPath: String,
-      maxQueries: Int = 4096,
+      maxQueries: Int = MaxQueriesPerPass,
       allowed: Option[DataFrame] = None,
       storedFilter: Option[org.apache.spark.sql.Column] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -752,28 +678,21 @@ object IvfPq {
       candidates: Int, allowed: Option[DataFrame] = None,
       storedFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(candidates >= k, s"candidates=$candidates must be >= k=$k")
-    val cents = spark.read.parquet(s"$path/centroids.parquet")
-      .orderBy("list").collect()
-      .map(r => r.getInt(0) -> r.getAs[Seq[Double]]("centroid").toArray)
-    val probed = cents.map { case (list, c) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = queryVec(j) - c(j); d += t * t; j += 1 }
-      (list, d)
-    }.sortBy { case (list, d) => (d, list) }.take(nProbe).map(_._1)
+    val h = IvfIndex.open(spark, path)
+    val probed = h.probe(queryVec, nProbe)
     val cand = Pq.adcTopK(
-      applyAllowed(applyStored(applyTombstones(
-        spark.read.parquet(s"$path/pq_codes")
-          .filter(col("list").isin(probed.toIndexedSeq: _*)), path),
+      applyAllowed(applyStored(h.withoutTombstoned(
+        h.read("pq_codes").filter(col("list").isin(probed.toIndexedSeq: _*))),
         storedFilter), allowed),
       "id", cb, queryVec, candidates).select("id")
     val q = array(queryVec.toIndexedSeq.map(lit): _*)
     val exact = expr(
       "aggregate(zip_with(vec, q, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-    applyTombstones(spark.read.parquet(s"$path/assignments")
+    h.withoutTombstoned(h.read("assignments")
       // candidate ids can only live in probed lists — the list filter
       // makes the pruning REAL (a bare id join would scan every
       // assignments partition and filter rows after the fact)
-      .filter(col("list").isin(probed.toIndexedSeq: _*)), path)
+      .filter(col("list").isin(probed.toIndexedSeq: _*)))
       .join(broadcast(cand), Seq("id"))
       .withColumn("q", q)
       .withColumn("score", exact)

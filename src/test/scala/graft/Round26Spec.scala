@@ -651,38 +651,6 @@ class Round26Spec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("CALL vector_search: missing query_where and unknown filter " +
-      "columns refuse loudly; the filter restricts every neighbor") {
-    val rnd = new scala.util.Random(37)
-    val wh = tmp("vsql-wh")
-    val catalog = new graft.sql.GraftCatalog(spark, wh)
-    val gsql = new graft.sql.GraftSql(catalog)
-    val t = catalog.createTable(TableConfig(name = "vs2",
-      keyField = "vec_id", orderingField = "vec_id", numBuckets = 1))
-    t.bulkInsert((1L to 40L).map(i =>
-        (i, Seq.fill(4)(rnd.nextGaussian()), (i % 2).toInt))
-      .toDF("vec_id", "embedding", "lang"))
-    val e = intercept[IllegalArgumentException] {
-      gsql.sql("CALL vector_search(table => 'vs2')") }
-    assert(e.getMessage.contains("query_where"), e.getMessage)
-    intercept[Exception] {
-      gsql.sql("CALL vector_search(table => 'vs2', " +
-        "query_where => 'vec_id = 1', filter => 'no_such_col = 1')")
-        .collect() }
-    val rows = gsql.sql("CALL vector_search(table => 'vs2', " +
-        "id_col => 'vec_id', vec_col => 'embedding', k => 5, " +
-        "n_lists => 2, query_where => 'vec_id <= 2', " +
-        "filter => 'lang = 0')")
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(rows.nonEmpty && rows.forall(_._2 % 2 == 0),
-      s"every neighbor must satisfy the filter: ${rows.mkString(",")}")
-    // a POSITIONAL call must not alias the named-only arguments (the
-    // table name in slot 0 would otherwise bind n_lists/query_where)
-    val e2 = intercept[IllegalArgumentException] {
-      gsql.sql("CALL vector_search('vs2', 'vec_id', 'embedding', 5)") }
-    assert(e2.getMessage.contains("query_where"), e2.getMessage)
-  }
-
   test("mmrSelectClustered matches mmrSelect on degenerate rows too: " +
       "a zero vector's NaN score orders identically in both paths") {
     val base = annCorpus(40, 8, 41)

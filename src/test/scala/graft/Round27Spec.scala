@@ -430,44 +430,6 @@ class Round27Spec extends AnyFunSuite
       "post-restore index must reflect the restored snapshot")
   }
 
-  test("CALL vector_search: ad-hoc query_vec literal searches without " +
-      "inserting the query; both/neither query forms refuse") {
-    val wh = tmp("vsql3")
-    val catalog = new graft.sql.GraftCatalog(spark, wh)
-    val gsql = new graft.sql.GraftSql(catalog)
-    val t = catalog.createTable(graft.core.TableConfig(name = "vs3",
-      keyField = "vec_id", orderingField = "vec_id", numBuckets = 1))
-    t.bulkInsert((0 until 30).map { i =>
-      (i.toLong, Array.tabulate(4)(j => math.sin(i * 4 + j + 1) + 2.0).toSeq)
-    }.toDF("vec_id", "embedding"))
-    val qv = Array.tabulate(4)(j => math.sin(17 * 4 + j + 1) + 2.0) // ≈ row 17
-    val rows = gsql.sql("CALL vector_search(table => 'vs3', " +
-        "id_col => 'vec_id', vec_col => 'embedding', k => 3, " +
-        s"n_lists => 2, query_vec => '[${qv.mkString(", ")}]')")
-      .orderBy("rank")
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(rows.length == 3)
-    assert(rows.forall(_._1 == -1L), "literal queries report query_id=-1")
-    // equals brute force over the table at the same k
-    val brute = graft.operators.Similarity.bruteForceTopK(
-      t.read().select("vec_id", "embedding"),
-      spark.range(1).select(lit(-1L).as("vec_id"),
-        array(qv.toIndexedSeq.map(lit): _*).as("embedding")),
-      "vec_id", "embedding", k = 3)
-      .orderBy("rank").select("neighbor_id").as[Long].collect()
-    assert(rows.map(_._2).toSeq == brute.toSeq)
-    // the query vector itself was never inserted into the table
-    assert(t.read().count() == 30L)
-    val eBoth = intercept[IllegalArgumentException] {
-      gsql.sql("CALL vector_search(table => 'vs3', " +
-        "query_where => 'vec_id = 1', query_vec => '[1,2,3,4]')") }
-    assert(eBoth.getMessage.contains("exactly one"))
-    val eDim = intercept[IllegalArgumentException] {
-      gsql.sql("CALL vector_search(table => 'vs3', id_col => 'vec_id', " +
-        "vec_col => 'embedding', query_vec => '[1, 2]')") }
-    assert(eDim.getMessage.contains("dim"))
-  }
-
   test("topKBatchStream chunks an over-maxQueries epoch: the snapshot " +
       "pins inside foreachBatch and the union equals the unchunked batch") {
     import org.apache.spark.sql.types._
@@ -504,113 +466,6 @@ class Round27Spec extends AnyFunSuite
       .as[(Long, Long, Long)].collect().toSet
     assert(got == want)
     assert(got.map(_._1).size == 10 * 3 || got.groupBy(_._1).size == 10)
-  }
-
-  test("CALL vector_search rerank mode: codes-scan + exact re-rank ≡ " +
-      "the topKRerank operator; string ids refuse") {
-    val wh = tmp("vsqlpq")
-    val catalog = new graft.sql.GraftCatalog(spark, wh)
-    val gsql = new graft.sql.GraftSql(catalog)
-    val t = catalog.createTable(graft.core.TableConfig(name = "vs4",
-      keyField = "vec_id", orderingField = "vec_id", numBuckets = 1))
-    t.bulkInsert((0 until 60).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 8 + j + 1) + 2.0).toSeq)
-    }.toDF("vec_id", "embedding"))
-    val qv = Array.tabulate(8)(j => math.sin(23 * 8 + j + 1) + 2.0)
-    val got = gsql.sql("CALL vector_search(table => 'vs4', " +
-        "id_col => 'vec_id', vec_col => 'embedding', k => 5, " +
-        "n_lists => 4, n_probe => 4, rerank => 60, " +
-        s"query_vec => '[${qv.mkString(", ")}]')")
-      .orderBy("rank")
-      .select("neighbor_id", "score").as[(Long, Double)].collect()
-    // the SQL surface must equal the operator on the same persisted
-    // index (full probe + candidates ≥ corpus ⇒ exact inner-product
-    // top-k, spec-pinned on the operator side)
-    val path = graft.core.TableServices.vectorIndexPath(t, "embedding")
-    val cb = IvfPq.codebooks(spark, path)
-    val want = IvfPq.topKRerank(spark, path, cb, qv, k = 5, nProbe = 4,
-        candidates = 60)
-      .select("id", "score").as[(Long, Double)].collect()
-    assert(got.toSeq == want.toSeq)
-    // string-keyed tables refuse rerank mode loudly (qid batching is
-    // numeric), rather than nulling every query id
-    val t2 = catalog.createTable(graft.core.TableConfig(name = "vs5",
-      keyField = "doc", orderingField = "doc", numBuckets = 1))
-    t2.bulkInsert((0 until 10).map { i =>
-      (s"d$i", Array.tabulate(8)(j => math.cos(i * 8 + j) + 2.0).toSeq)
-    }.toDF("doc", "embedding"))
-    val e = intercept[IllegalArgumentException] {
-      gsql.sql("CALL vector_search(table => 'vs5', id_col => 'doc', " +
-        "vec_col => 'embedding', k => 3, n_lists => 2, rerank => 10, " +
-        "query_vec => '[1,1,1,1,1,1,1,1]')")
-    }
-    assert(e.getMessage.contains("numeric"), e.getMessage)
-  }
-
-  test("CALL vector_search stored_filter: build-time meta_cols push " +
-      "into the scan; incremental maintenance carries them") {
-    val wh = tmp("vsqlsf")
-    val catalog = new graft.sql.GraftCatalog(spark, wh)
-    val gsql = new graft.sql.GraftSql(catalog)
-    val t = catalog.createTable(graft.core.TableConfig(name = "vs6",
-      keyField = "vec_id", orderingField = "ver", numBuckets = 1))
-    t.bulkInsert((0 until 40).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 8 + j + 1) + 2.0).toSeq,
-        (i % 2).toLong, 1L)
-    }.toDF("vec_id", "embedding", "lang", "ver"))
-    gsql.sql("CALL build_vector_index(table => 'vs6', id_col => 'vec_id', " +
-      "vec_col => 'embedding', n_lists => 4, meta_cols => 'lang')")
-    val qv = Array.tabulate(8)(j => math.sin(11 * 8 + j + 1) + 2.0)
-    def searchEven() = gsql.sql("CALL vector_search(table => 'vs6', " +
-        "id_col => 'vec_id', vec_col => 'embedding', k => 5, " +
-        "n_lists => 4, stored_filter => 'lang = 0', " +
-        s"query_vec => '[${qv.mkString(", ")}]')")
-      .orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
-    val got = searchEven()
-    val want = Similarity.bruteForceTopK(
-      t.read().filter($"lang" === 0).select("vec_id", "embedding"),
-      spark.range(1).select(lit(-1L).as("vec_id"),
-        array(qv.toIndexedSeq.map(lit): _*).as("embedding")),
-      "vec_id", "embedding", k = 5)
-      .orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
-    assert(got == want)
-    assert(got.forall(_ % 2 == 0))
-    // the predicate reaches the parquet scan itself (PushedFilters)
-    val df = graft.operators.IvfIndex.topK(spark,
-      graft.core.TableServices.vectorIndexPath(t, "embedding"),
-      spark.range(1).select(lit(-1L).as("vec_id"),
-        array(qv.toIndexedSeq.map(lit): _*).cast(
-          t.read().schema("embedding").dataType).as("embedding")),
-      "vec_id", "embedding", k = 5, nProbe = 4,
-      storedFilter = Some($"lang" === 0))
-    df.collect()
-    val pushed = collect(df.queryExecution.executedPlan) {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.metadata.get("PushedFilters").exists(_.contains("lang")) => s
-    }
-    assert(pushed.nonEmpty,
-      s"lang predicate must land in PushedFilters:\n${df.queryExecution.executedPlan}")
-    // a commit must NOT degrade to a rebuild: maintenance appends carry
-    // the stored column, centroids stay byte-identical, and the new
-    // rows obey the filter
-    val path = graft.core.TableServices.vectorIndexPath(t, "embedding")
-    val centsBefore = centroidBytes(path)
-    t.upsert(nullableVec(Seq(
-        (100L, Array.tabulate(8)(j => math.sin(11 * 8 + j + 1) + 2.001).toSeq, 0L, 2L),
-        (101L, Array.tabulate(8)(j => math.sin(11 * 8 + j + 1) + 2.001).toSeq, 1L, 2L))
-      .toDF("vec_id", "embedding", "lang", "ver")))
-    val got2 = searchEven()
-    assert(centroidBytes(path) == centsBefore,
-      "maintenance with stored meta_cols must stay incremental")
-    assert(got2.contains(100L), "new lang=0 row must be served")
-    assert(!got2.contains(101L), "new lang=1 row must be filtered out")
-    // rerank mode serves the same stored_filter
-    val got3 = gsql.sql("CALL vector_search(table => 'vs6', " +
-        "id_col => 'vec_id', vec_col => 'embedding', k => 5, " +
-        "n_lists => 4, rerank => 64, stored_filter => 'lang = 0', " +
-        s"query_vec => '[${qv.mkString(", ")}]')")
-      .select("neighbor_id").as[Long].collect().toSeq
-    assert(got3.forall(_ % 2 == 0) && got3.contains(100L))
   }
 
   test("CALL mmr_select: ≡ the operator result on the same fixture; " +

@@ -915,15 +915,18 @@ class Round28Spec extends AnyFunSuite
     // post-fold, the raw-tier search plan has NO anti-join node — the
     // tombstone relation is gone and applyTombstones is a no-op
     val q = t.read().filter($"vec_id" === 30L).select("vec_id", "embedding")
-    val df = graft.operators.IvfIndex.topK(spark, path, q,
-      "vec_id", "embedding", k = 3, nProbe = 4)
-    df.collect()
-    val antis = collect(df.queryExecution.executedPlan) {
+    val (_, runs) = org.apache.spark.Observed.executions(spark) {
+      graft.operators.IvfIndex.topK(spark, path, q,
+        "vec_id", "embedding", k = 3, nProbe = 4).collect()
+    }
+    val scans = runs.collect { case ("vector_search", qe) => qe.executedPlan }
+    assert(scans.nonEmpty, s"the search must scan the index: ${runs.map(_._1)}")
+    val antis = scans.flatMap(collect(_) {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
           if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-    }
+    })
     assert(antis.isEmpty,
-      s"post-fold search must not anti-join:\n${df.queryExecution.executedPlan}")
+      s"post-fold search must not anti-join:\n${scans.mkString("\n")}")
     // changing a knob is a new index identity → rebuild, new stamp
     gsql.sql("CALL build_vector_index(table => 'vs9', id_col => 'vec_id', " +
       "vec_col => 'embedding', n_lists => 4, fold_threshold => '0.5')")

@@ -16,7 +16,6 @@ class MorMergeSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("MOR readIncremental is one Spark job with no Exchange") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val t = GraftTable.create(spark,
       graft.util.TempDirs.create("graft-mormerge-").toString,
       TableConfig(name = "inc8", keyField = "key", orderingField = "ts",
@@ -27,20 +26,10 @@ class MorMergeSpec extends AnyFunSuite {
     val inc = t.readIncremental(first)
     val plan = MorMergeSpec.physical(inc)
     assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val got =
-      try {
-        val r = inc.select("key", "volume").as[(String, Long)].collect().toMap
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(1000)
-        r
-      } finally spark.sparkContext.removeSparkListener(l)
+    val (got, jobs) = org.apache.spark.Observed.jobs(spark)(
+      inc.select("key", "volume").as[(String, Long)].collect().toMap)
     assert(got == Map("K1" -> 100L, "K17" -> 17L))
-    assert(jobs.get() == 1, s"expected 1 Spark job, saw ${jobs.get()}")
+    assert(jobs == 1, s"expected 1 Spark job, saw $jobs")
   }
 
   test("a column a later commit adds reads null from older files, through SQL and the API") {

@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.Session
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.Observed
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,19 +15,7 @@ class WriteJobBudgetSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** Spark jobs started while `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
+  private def jobsOf(body: => Unit): Int = Observed.jobs(spark)(body)._2
 
   private def rows(t: GraftTable): Set[(Long, String, Long, Long)] =
     t.read().select("id", "p", "ver", "v").as[(Long, String, Long, Long)]

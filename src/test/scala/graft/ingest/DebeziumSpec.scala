@@ -143,7 +143,6 @@ class DebeziumSpec extends AnyFunSuite {
   }
 
   test("one Debezium batch into a partitioned COW table is one commit and at most 8 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val t = GraftTable.create(spark,
       graft.util.TempDirs.create("graft-dbz-budget-").toString,
       TableConfig(name = "dbzbudget", keyField = "id", orderingField = "ver",
@@ -157,18 +156,9 @@ class DebeziumSpec extends AnyFunSuite {
       env("d", 13, base(2).json, "null"),
       env("d", 14, base(7).json, "null"))
     val commits = t.log.commits().length
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      applyLines(t, lines)
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val jobs = org.apache.spark.Observed.jobs(spark)(applyLines(t, lines))._2
     val made = t.log.commits().length - commits
-    assert(made == 1 && jobs.get() <= 8, s"$made commits, ${jobs.get()} Spark jobs")
+    assert(made == 1 && jobs <= 8, s"$made commits, $jobs Spark jobs")
     val expect = (base.filterNot(r => Set(2L, 7L)(r.id)).map(r =>
       if (r.id == 1L) r.copy(ver = 11L, v = 70L)
       else if (r.id == 6L) r.copy(ver = 12L, v = 71L) else r) :+
